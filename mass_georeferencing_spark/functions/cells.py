@@ -223,12 +223,56 @@ def latlng_to_cell_col(lat: Column, lon: Column, res: int = DEFAULT_POINT_RES) -
         ((least(greatest(cast(floor((lon+180)/360*{n}) as bigint),0),{n}-1) * {2^26}
           + least(greatest(cast(floor((lat+90)/180*{n}) as bigint),0),{n}-1)) * 32 + res
     """
+    x, y = _xy_cols(lat, lon, res)
+    return _xy_to_cell_col(x, y, res)
+
+
+def _xy_cols(lat: Column, lon: Column, res: int) -> tuple[Column, Column]:
     n = 1 << res
     x = F.floor((lon + F.lit(180.0)) / F.lit(360.0) * F.lit(float(n))).cast("long")
     y = F.floor((lat + F.lit(90.0)) / F.lit(180.0) * F.lit(float(n))).cast("long")
     x = F.least(F.greatest(x, F.lit(0)), F.lit(n - 1))
     y = F.least(F.greatest(y, F.lit(0)), F.lit(n - 1))
+    return x, y
+
+
+def _xy_to_cell_col(x: Column, y: Column, res: int) -> Column:
     return (x * F.lit(1 << Y_BITS) + y) * F.lit(1 << RES_BITS) + F.lit(res)
+
+
+def ring_cells_col(
+    lat: Column, lon: Column, res: int, k: int, full_disk: bool = False
+) -> Column:
+    """Pure-JVM twin of :func:`ring` (or of :func:`k_ring` when ``full_disk``)
+    for the point's cell: an array of distinct cell ids, pinned equal as a set
+    by tests/test_cells_kernel.py. x wraps mod 2^res, a y off the grid is
+    dropped (NULL, removed here), and wrap-around repeats are removed by
+    ``array_distinct``."""
+    n = 1 << res
+    x, y = _xy_cols(lat, lon, res)
+    cells = []
+    for dx in range(-k, k + 1):
+        for dy in range(-k, k + 1):
+            if not full_disk and max(abs(dx), abs(dy)) != k:
+                continue
+            yy = y + F.lit(dy)
+            xx = F.pmod(x + F.lit(dx), F.lit(n))
+            cells.append(F.when((yy >= 0) & (yy < n), _xy_to_cell_col(xx, yy, res)))
+    return F.array_compact(F.array_distinct(F.array(*cells)))
+
+
+def ring_guarantee_col(lat: Column, res: int, k: int) -> Column:
+    """Pure-JVM twin of :func:`ring_guarantee_m` (same operations in the same
+    order; pinned by tests/test_cells_kernel.py)."""
+    n = 1 << res
+    deg_h = 180.0 / n
+    m_per_deg = math.pi * EARTH_RADIUS_M / 180.0
+    height = deg_h * m_per_deg
+    if 2 * k + 1 >= n:
+        return F.lit(k * height)
+    band_lat = F.least(F.abs(lat) + F.lit((k + 1) * deg_h), F.lit(90.0))
+    width = F.lit((360.0 / n) * m_per_deg) * F.cos(F.radians(band_lat))
+    return F.lit(float(k)) * F.least(F.greatest(width, F.lit(0.0)), F.lit(height))
 
 
 def cell_parent_col(cell: Column, res: int, parent_res: int) -> Column:

@@ -11,13 +11,20 @@ best distance is ≤ the guaranteed minimum distance to anything outside the pro
 ring (functions/cells.py:ring_guarantee_m — conservative under the equirect grid),
 so results are EXACT, verifiable against a brute-force oracle.
 
-Physical plan per round r:
-  unsettled points → explode ring(r) cells (generator, no Python per row beyond a
-  vectorized ring build) → hash equi-join on cell vs the bucketed right side →
-  haversine (codegen) → running top-k via window.
-The loop is driver-side but each iteration is fully distributed; ~2-4 rounds
-suffice when the grid resolution matches the right side's density. Hot cells:
-the right side is pre-aggregated per cell, AQE splits skewed probe cells.
+Physical plan per round r (no Python, one exchange of at most k rows per
+query and partition):
+  unsettled points → ``explode`` of ring(r) cell ids, or the whole disk in
+  round 0, built as JVM Column math (functions/cells.py:ring_cells_col; the
+  probe row carries lat/lon, so nothing joins back on id) → equi-join on
+  cell vs the bucketed targets, whose side is spread over
+  2 × defaultParallelism partitions so candidate rows are born on every core
+  (NOTES lesson 1; the planner still picks the build side) → haversine
+  (codegen) → ``row_number`` over (distance_m, target_id) ≤ k, planned as a
+  partial WindowGroupLimit ahead of the exchange → union with the previous
+  rounds' top-k, dedup (query, target), top-k again. The settle bound is a
+  Column expression too (cells.ring_guarantee_col).
+The loop is driver-side but each iteration is fully distributed; ~1-3 rounds
+suffice when the grid resolution matches the right side's density.
 """
 
 from __future__ import annotations
@@ -25,47 +32,12 @@ from __future__ import annotations
 import math
 from collections.abc import Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructField, StructType
 
 from ..functions import cells as C
 from ..functions.geo import haversine_col
-
-
-def _explode_rings(
-    points: DataFrame,
-    res: int,
-    k: int,
-    id_col: str,
-    lat_col: str,
-    lon_col: str,
-    full_disk: bool = False,
-) -> DataFrame:
-    """(id, lat, lon) → one row per cell in ring(k) — or the full k-ring disk
-    when ``full_disk`` (used for the first probe round)."""
-    schema = StructType(
-        [
-            StructField(id_col, points.schema[id_col].dataType),
-            StructField("_cell", LongType()),
-        ]
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, cells_out = [], []
-            cell_ids = C.latlng_to_cell(
-                pdf[lat_col].to_numpy(np.float64), pdf[lon_col].to_numpy(np.float64), res
-            )
-            for pid, cell in zip(pdf[id_col], cell_ids):
-                ring_cells = C.k_ring(int(cell), k) if full_disk else C.ring(int(cell), k)
-                ids.extend([pid] * len(ring_cells))
-                cells_out.extend(ring_cells.tolist())
-            yield pd.DataFrame({id_col: ids, "_cell": cells_out})
-
-    return points.select(id_col, lat_col, lon_col).mapInPandas(gen, schema)
 
 
 def knn_join(
@@ -93,56 +65,62 @@ def knn_join(
     Pick ``res`` so cells hold ~10²-10³ targets; a too-fine grid multiplies
     rounds, a too-coarse one multiplies exact-distance evaluations (JVM, cheap).
     """
-    t = targets.withColumn(
-        "_cell", C.latlng_to_cell_col(F.col(target_lat), F.col(target_lon), res)
-    ).select(target_id_col, target_lat, target_lon, "_cell")
-
-    q = queries.select(id_col, lat_col, lon_col)
+    spread = 2 * queries.sparkSession.sparkContext.defaultParallelism
+    t = (
+        targets.select(target_id_col, target_lat, target_lon)
+        .withColumn("_cell", C.latlng_to_cell_col(F.col(target_lat), F.col(target_lon), res))
+        # the side the planner streams through the _cell join is where the
+        # candidate rows are born: spread it (NOTES lesson 1)
+        .repartition(spread)
+    )
     best: DataFrame | None = None
-    unsettled = q
-    spark = queries.sparkSession
+    unsettled = queries.select(id_col, lat_col, lon_col)
 
     r = initial_k
     for round_no in range(max_rounds):
-        probe = _explode_rings(
-            unsettled, res, r, id_col, lat_col, lon_col, full_disk=(round_no == 0)
+        cells = C.ring_cells_col(
+            F.col(lat_col), F.col(lon_col), res, r, full_disk=(round_no == 0)
         )
         hits = (
-            probe.join(t, on="_cell")
-            .join(unsettled, on=id_col)
-            .withColumn(
-                "distance_m",
-                haversine_col(F.col(lon_col), F.col(lat_col), F.col(target_lon), F.col(target_lat)),
+            unsettled.select(id_col, lat_col, lon_col, F.explode(cells).alias("_cell"))
+            .join(t, on="_cell")
+            .select(
+                id_col, lat_col, lon_col, target_id_col, target_lat, target_lon,
+                haversine_col(
+                    F.col(lon_col), F.col(lat_col), F.col(target_lon), F.col(target_lat)
+                ).alias("distance_m"),
             )
-            .select(id_col, lat_col, lon_col, target_id_col, target_lat, target_lon, "distance_m")
         )
-        best = hits if best is None else best.drop("knn_rank").unionByName(hits)
-        # dedup (query, target): under antimeridian wrap a cell can lie in two
-        # rings (dx=-1 ≡ dx=n-1 on a narrow grid), re-yielding the same target
-        best = best.dropDuplicates([id_col, target_id_col])
-        # keep only the running top-k per query (bounds state growth)
-        w = Window.partitionBy(id_col).orderBy(F.col("distance_m").asc(), F.col(target_id_col).asc())
-        best = best.withColumn("knn_rank", F.row_number().over(w)).where(F.col("knn_rank") <= k)
-        best = best.localCheckpoint(eager=True)  # truncate the iterative lineage
+        # cut to the round's top-k before any exchange: the filtered row_number
+        # plans as a partial WindowGroupLimit below the shuffle. A dedup over
+        # the raw hits would block it, so (query, target) repeats — a cell in
+        # two rings under antimeridian wrap — are removed after the cut
+        best_new = _top_k(hits, k, id_col, target_id_col)
+        if best is not None:
+            pooled = best.unionByName(best_new).drop("knn_rank")
+            best_new = _top_k(
+                pooled.dropDuplicates([id_col, target_id_col]), k, id_col, target_id_col
+            )
+        best = best_new.localCheckpoint(eager=True)  # truncate the iterative lineage
 
-        # settled test: kth distance ≤ guaranteed min distance beyond ring r
-        kth = best.groupBy(id_col).agg(
-            F.max("distance_m").alias("_kth"), F.count(F.lit(1)).alias("_nhits")
-        )
-        guard = _ring_guarantee_udf(res, r)
-        settled = (
-            unsettled.join(kth, on=id_col, how="left")
-            .withColumn("_guar", guard(F.col(lat_col)))
-            .where((F.col("_nhits") >= k) & (F.col("_kth") <= F.col("_guar")))
-            .select(id_col)
-        )
+        # settled: k hits found and the k-th distance ≤ the guaranteed minimum
+        # distance to anything beyond ring r
+        settled = best.where(
+            (F.col("knn_rank") == k)
+            & (F.col("distance_m") <= C.ring_guarantee_col(F.col(lat_col), res, r))
+        ).select(id_col)
         unsettled = unsettled.join(settled, on=id_col, how="left_anti").localCheckpoint(eager=True)
         if unsettled.isEmpty():
             break
         r += 1
 
-    result = best.join(queries, on=[id_col, lat_col, lon_col])
-    return result
+    return best.join(queries, on=[id_col, lat_col, lon_col])
+
+
+def _top_k(df: DataFrame, k: int, id_col: str, target_id_col: str) -> DataFrame:
+    """Rows ranked 1..k per query by (distance_m, target_id), as ``knn_rank``."""
+    w = Window.partitionBy(id_col).orderBy(F.col("distance_m").asc(), F.col(target_id_col).asc())
+    return df.withColumn("knn_rank", F.row_number().over(w)).where(F.col("knn_rank") <= k)
 
 
 def knn_join_broadcast(
@@ -247,14 +225,6 @@ def knn_join_broadcast(
         .mapInPandas(gen, schema)
     )
     return out.join(queries, on=id_col)
-
-
-def _ring_guarantee_udf(res: int, k: int):
-    @F.pandas_udf("double")
-    def guar(lat: pd.Series) -> pd.Series:
-        return lat.map(lambda v: C.ring_guarantee_m(float(v), res, k))
-
-    return guar
 
 
 M_PER_DEG = math.pi * 6371008.8 / 180.0  # meridian meters per degree

@@ -79,13 +79,18 @@ def sample_oracle_predicate(
     salt: str = "mgs",
     default_rate: float = 0.0,
 ) -> str:
-    """DuckDB twin of the keep predicate (same md5, same hex compare)."""
+    """DuckDB twin of the keep predicate (same md5, same hex compare).
+    Strata values and ``salt`` become SQL string literals, quotes doubled."""
     branches = "".join(
-        f"WHEN {strata_col} = '{s}' THEN '{rate_threshold_hex(r)}' "
+        f"WHEN {strata_col} = {_sql_str(s)} THEN '{rate_threshold_hex(r)}' "
         for s, r in sorted(rates.items())
     )
     case = f"CASE {branches}ELSE '{rate_threshold_hex(default_rate)}' END"
     return (
-        f"substr(md5('{salt}' || '|' || coalesce(CAST({id_col} AS VARCHAR), '')), "
+        f"substr(md5({_sql_str(salt)} || '|' || coalesce(CAST({id_col} AS VARCHAR), '')), "
         f"1, {_HEX_WIDTH}) < {case}"
     )
+
+
+def _sql_str(value: str) -> str:
+    return "'" + value.replace("'", "''") + "'"

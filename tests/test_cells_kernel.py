@@ -15,6 +15,8 @@ from mass_georeferencing_spark.functions.cells import (
     pick_cover_res,
     polygon_to_cells,
     ring,
+    ring_cells_col,
+    ring_guarantee_col,
     ring_guarantee_m,
 )
 from mass_georeferencing_spark.functions.geo import PreparedPolygon
@@ -107,6 +109,40 @@ def test_ring_guarantee_bound():
     # centers of ring k+1 cells are outside the k-ring; all must exceed the bound
     assert (d >= bound).all()
     assert bound > 0
+
+
+_LAT = st.sampled_from([-90.0, 90.0, -89.99, 89.99, 0.0]) | st.floats(-90, 90)
+_LON = st.sampled_from([-180.0, 180.0, -179.99, 179.99]) | st.floats(-180, 180)
+
+
+@settings(max_examples=25, deadline=None)
+@given(res=st.integers(1, 6), data=st.data())
+def test_jvm_ring_cells_match_numpy(spark, res, data):
+    # the kNN probe's JVM ring/disk cells and settle bound equal the numpy
+    # reference, including k past 2^res (full wrap) and the grid edges
+    from pyspark.sql import functions as F
+
+    k = data.draw(st.integers(0, (1 << res) + 2), label="k")
+    disk_k = data.draw(st.integers(0, 3), label="disk_k")
+    pts = data.draw(st.lists(st.tuples(_LAT, _LON), min_size=1, max_size=6), label="pts")
+    lat, lon = F.col("lat"), F.col("lon")
+    rows = (
+        spark.createDataFrame(pts, ["lat", "lon"])
+        .select(
+            "lat", "lon",
+            ring_cells_col(lat, lon, res, k).alias("ring"),
+            ring_cells_col(lat, lon, res, disk_k, full_disk=True).alias("disk"),
+            ring_guarantee_col(lat, res, k).alias("guar"),
+        )
+        .collect()
+    )
+    for row in rows:
+        cell = int(latlng_to_cell(np.array([row.lat]), np.array([row.lon]), res)[0])
+        assert len(row.ring) == len(set(row.ring))
+        assert set(row.ring) == set(ring(cell, k).tolist()), (row.lat, row.lon)
+        assert set(row.disk) == set(k_ring(cell, disk_k).tolist()), (row.lat, row.lon)
+        want = ring_guarantee_m(row.lat, res, k)
+        assert abs(row.guar - want) <= 1e-9 * abs(want), (row.guar, want)
 
 
 def test_cell_span_reasonable():

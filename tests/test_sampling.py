@@ -81,6 +81,24 @@ def test_null_ids_agree_with_twin(spark):
     assert got == want
 
 
+def test_quoted_strata_and_salt_agree_with_twin(spark):
+    # a stratum or salt holding a single quote must stay one SQL literal
+    rows = [(i, "o'c" if i % 2 else "en") for i in range(40)]
+    rates = {"o'c": 0.5, "en": 1.0}
+    docs = spark.createDataFrame(rows, "doc_id bigint, lang string")
+    got = {
+        r.doc_id
+        for r in sampling.stratified_sample(docs, rates, salt="it's").select("doc_id").collect()
+    }
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, lang VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+    pred = sampling.sample_oracle_predicate(rates, salt="it's")
+    want = {r[0] for r in con.execute(f"SELECT doc_id FROM documents WHERE {pred}").fetchall()}
+    assert got == want
+    assert {i for i in range(0, 40, 2)} <= got < set(range(40))
+
+
 def test_default_rate_fails_closed_and_validates(spark):
     docs = _docs(spark)
     out = sampling.stratified_sample(docs, {"en": 1.0})  # others unlisted

@@ -91,6 +91,93 @@ def test_knn_join_exact_vs_brute(spark):
         assert have == want, (qid, have, want)
 
 
+def _knn_edge_fixture():
+    # targets: distinct points plus exact duplicates of some of them (distance
+    # ties that target_id must break); queries: the antimeridian and the caps
+    rng = np.random.RandomState(11)
+    base = [(float(rng.uniform(-85, 85)), float(rng.uniform(-180, 180))) for _ in range(30)]
+    base += [(0.5, 179.9), (-1.0, -179.8), (84.0, 178.0), (-83.0, -175.0)]
+    coords = base + [base[j] for j in (0, 3, 30, 31, 32, 32)]
+    trows = [(f"t{j:03d}", lat, lon) for j, (lat, lon) in enumerate(coords)]
+    qrows = [
+        ("q_east", 0.2, 179.999), ("q_west", -0.3, -179.999), ("q_180", 10.0, 180.0),
+        ("q_m180", -10.0, -180.0), ("q_n", 85.5, 120.0), ("q_s", -88.0, -60.0),
+        ("q_n_am", 81.0, -179.5), ("q_pole", 90.0, 0.0), ("q_dup", base[0][0], base[0][1]),
+    ]
+    return qrows, trows
+
+
+@pytest.mark.parametrize("res", [2, 3])
+def test_knn_join_exact_on_edge_fixture(spark, res):
+    from mass_georeferencing_spark.operators.knn import knn_join_broadcast
+
+    qrows, trows = _knn_edge_fixture()
+    q = spark.createDataFrame(qrows, ["query_id", "lat", "lon"])
+    t = spark.createDataFrame(trows, ["target_id", "target_lat", "target_lon"])
+    k = 3
+    got = {
+        (r.query_id, r.knn_rank): (r.target_id, r.distance_m)
+        for r in knn_join(q, t, k=k, res=res).collect()
+    }
+    tlat = np.array([r[1] for r in trows])
+    tlon = np.array([r[2] for r in trows])
+    want = {}
+    for qid, qlat, qlon in qrows:
+        d = haversine_m(np.full(len(trows), qlon), np.full(len(trows), qlat), tlon, tlat)
+        # target ids are zero-padded in row order: the index breaks ties by id
+        order = np.lexsort((np.arange(len(trows)), d))
+        for rank, j in enumerate(order[:k], start=1):
+            want[(qid, rank)] = (trows[j][0], d[j])
+    assert {key: v[0] for key, v in got.items()} == {key: v[0] for key, v in want.items()}
+    for key, (_, dist) in want.items():
+        assert got[key][1] == pytest.approx(dist, rel=1e-9, abs=1e-6)
+    bc = {
+        (r.query_id, r.knn_rank): r.target_id
+        for r in knn_join_broadcast(q, t, k=k).collect()
+    }
+    assert bc == {key: v[0] for key, v in got.items()}
+
+
+def test_knn_join_round_plan_shape(spark, monkeypatch):
+    # every checkpointed round frame is pure JVM, and the round's top-k is cut
+    # by a partial WindowGroupLimit before the first exchange above the
+    # distance projection (static plans: AQE off, as tools/explain_audit.py)
+    qrows, trows = _knn_edge_fixture()
+    q = spark.createDataFrame(qrows, ["query_id", "lat", "lon"])
+    t = spark.createDataFrame(trows, ["target_id", "target_lat", "target_lon"])
+    plans = []
+    frame_cls = type(q)
+    checkpoint = frame_cls.localCheckpoint
+
+    def recording(self, *args, **kwargs):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", recording)
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        knn_join(q, t, k=3, res=3).collect()
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+
+    round_plans = [p for p in plans if "AS distance_m" in p]
+    assert len(round_plans) >= 2  # the edge fixture needs more than one round
+    for plan in plans:
+        assert "MapInPandas" not in plan and "ArrowEvalPython" not in plan, plan
+    for plan in round_plans:
+        lines = plan.splitlines()
+        depth = [len(ln) - len(ln.lstrip(" :+-")) for ln in lines]
+        at = max(i for i, ln in enumerate(lines) if "AS distance_m" in ln)
+        ancestors = []
+        for i in range(at - 1, -1, -1):
+            if depth[i] < depth[at if not ancestors else ancestors[-1]]:
+                ancestors.append(i)
+        first_exchange = next(i for i in ancestors if "Exchange" in lines[i])
+        below = [lines[i] for i in ancestors if i > first_exchange]
+        assert any("WindowGroupLimit" in ln and "Partial" in ln for ln in below), plan
+
+
 def test_zonal_stats_rect(spark):
     samples = spark.createDataFrame(
         [(i, float((i * 11) % 170 - 85) + 0.5, float((i * 7) % 360 - 180) + 0.5, float(i % 100)) for i in range(300)],

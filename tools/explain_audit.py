@@ -6,7 +6,7 @@ grep for the plan properties the 100 TB design depends on:
 - dimension joins are BroadcastHashJoin (no shuffle of the big side);
 - relational stages sit inside WholeStageCodegen spans;
 - the only Python boundaries are ArrowEvalPython / MapInPandas nodes at the
-  designed UDF points (fuzzy scoring, PIP refine, cover/ring generators).
+  designed UDF points (fuzzy scoring, PIP refine, cover generators).
 
 Run: python tools/explain_audit.py [sf_dir]
 """

@@ -31,6 +31,27 @@ from scale_bench import run_bench  # fresh-JVM runner with sample merging
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
+def efficiencies(
+    big: dict[int, float], small: dict[int, float]
+) -> tuple[dict[int, float], dict[str, float], dict[str, float | str]]:
+    """(engine time per level, raw and engine-time N→4N efficiency per pairing)
+    from the per-level median walls at the gate and near-zero workloads.
+    Engine time is big − small; a pairing whose engine time is ≤ 0 at either
+    level has no meaningful ratio, so its engine-time efficiency is "n/a"."""
+    engine = {c: round(big[c] - small[c], 3) for c in big}
+    pairs = [(n, 4 * n) for n in big if 4 * n in big]
+    raw = {f"{n}->{m}": round((big[n] / big[m]) / 4.0, 3) for n, m in pairs}
+    eng: dict[str, float | str] = {
+        f"{n}->{m}": (
+            round((engine[n] / engine[m]) / 4.0, 3)
+            if engine[n] > 0 and engine[m] > 0
+            else "n/a"
+        )
+        for n, m in pairs
+    }
+    return engine, raw, eng
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     big = os.environ.get("SPARK_GRAFT_BENCH_FACTOR", "96")
@@ -57,14 +78,17 @@ def main() -> None:
             "georeference_e2e", [r["queries"]["georeference_e2e"]]
         )
 
-    engine = {c: round(med("big", c) - med("small", c), 3) for c in levels}
-    pairs = [(n, 4 * n) for n in levels if 4 * n in engine]
-    effs_raw = {
-        f"{n}->{m}": round((med("big", n) / med("big", m)) / 4.0, 3) for n, m in pairs
-    }
-    effs_engine = {
-        f"{n}->{m}": round((engine[n] / engine[m]) / 4.0, 3) for n, m in pairs
-    }
+    big_medians = {c: med("big", c) for c in levels}
+    small_medians = {c: med("small", c) for c in levels}
+    engine, effs_raw, effs_engine = efficiencies(big_medians, small_medians)
+    for pair, eff in effs_engine.items():
+        if eff == "n/a":
+            print(
+                f"scale_decompose: engine time <= 0 in pairing {pair} (the near-zero "
+                f"workload took at least as long as the gate workload); "
+                f"engine-time efficiency reported as n/a",
+                file=sys.stderr,
+            )
 
     n_pages_big = res["big"][levels[0]]["n_pages"]
     n_pages_small = res["small"][levels[0]]["n_pages"]
@@ -107,8 +131,8 @@ Target ≥ 0.8 per BASELINE.json's north rule.)
     with open(os.path.join(REPO, "BENCH", "scale_decompose.md"), "w") as fh:
         fh.write(md)
     print(json.dumps({
-        "big_medians": {c: med("big", c) for c in levels},
-        "small_medians": {c: med("small", c) for c in levels},
+        "big_medians": big_medians,
+        "small_medians": small_medians,
         "big_samples": {c: samples("big", c) for c in levels},
         "small_samples": {c: samples("small", c) for c in levels},
         "engine_time": engine,
