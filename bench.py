@@ -8,6 +8,11 @@ shuffle/UDF/parallelism behavior dominates, which is what the 100 TB design must
 demonstrate. Factors via SPARK_GRAFT_BENCH_FACTOR (pages) and
 SPARK_GRAFT_BENCH_GAZ_FACTOR (gazetteer).
 
+``georeference_e2e`` runs ``plans.pipeline.georeference_frames`` — the
+``j1_fuzzy_flagship`` plan, spatial scoring included — over the amplified
+sources. Rounds r1–r5 timed a hand copy without spatial scoring, so their
+georeference_e2e numbers are not comparable with later ones.
+
 Timing uses the noop sink: full plan execution, no driver collect.
 Env: SPARK_GRAFT_BENCH_ONLY=name1,name2 restricts the suite (used by
 tools/scale_bench.py for the N-vs-4N scaling-efficiency evidence).
@@ -28,126 +33,26 @@ from pyspark.sql import functions as F
 from mass_georeferencing_spark.session import get_spark
 from mass_georeferencing_spark.sources import synthetic as syn
 
-VOCAB = (
-    "alpha bravo charlie delta echo foxtrot golf hotel india juliett kilo lima "
-    "mike november oscar papa quebec romeo sierra tango"
-).split()
-
-
-def amplified_pages(spark: SparkSession, sf_dir: str, factor: int) -> DataFrame:
-    """pages × factor with deterministic text mutation: replica r prepends a
-    vocab word, shifting every mention/name extraction — disjoint replica
-    'dialects' keep the pair space realistic instead of factor² duplicates."""
-    # the sf0.1 documents parquet is ONE file → one scan partition; the
-    # amplification crossJoin (tiny replica side broadcast) inherits that and
-    # serializes the whole derive chain. A real web-scale input arrives in
-    # thousands of splits, so spread the small PRE-amplification side — a
-    # 4k-row shuffle — and every replica slice amplifies in parallel.
-    pages = syn.pages_df(spark, sf_dir).repartition(
-        spark.sparkContext.defaultParallelism
-    )
-    reps = spark.range(factor).withColumnRenamed("id", "rep")
-    vocab_arr = F.array(*[F.lit(w) for w in VOCAB])
-    return (
-        pages.crossJoin(reps)
-        .withColumn("doc_id", F.col("doc_id") * factor + F.col("rep"))
-        .withColumn("url", F.concat(F.col("url"), F.lit("/r"), F.col("rep")))
-        .withColumn(
-            "text",
-            F.concat(
-                F.element_at(vocab_arr, (F.col("rep") % len(VOCAB) + 1).cast("int")),
-                F.lit(" "),
-                F.col("text"),
-            ),
-        )
-        .drop("rep")
-    )
-
-
-def amplified_mentions(pages: DataFrame) -> DataFrame:
-    has_coords = F.col("doc_id") % 7 == 0
-    out = []
-    for pat in (r"^(\w+ \w+)", r"^\w+ \w+ \w+ (\w+ \w+)"):
-        out.append(
-            pages.select(
-                "url",
-                "lang",
-                "doc_id",
-                F.regexp_extract("text", pat, 1).alias("mention"),
-                F.regexp_extract("text", r"^\w+ \w+ (\w+)", 1).alias("state"),
-                F.when(has_coords, (F.col("doc_id") * 37) % 170 - 85 + 0.5).alias("lat"),
-                F.when(has_coords, (F.col("doc_id") * 53) % 360 - 180 + 0.5).alias("lon"),
-            ).where(F.col("mention") != "")
-        )
-    return out[0].unionByName(out[1])
-
-
-def amplified_gazetteer(spark: SparkSession, sf_dir: str, factor: int) -> DataFrame:
-    gaz = syn.gazetteer_df(spark, sf_dir)
-    gaz = gaz.repartition(spark.sparkContext.defaultParallelism)
-    reps = spark.range(factor).withColumnRenamed("id", "rep")
-    vocab_arr = F.array(*[F.lit(w) for w in VOCAB])
-    return (
-        gaz.crossJoin(reps)
-        .withColumn("uid", F.concat(F.col("uid"), F.lit("/r"), F.col("rep")))
-        .withColumn(
-            "name",
-            F.concat(
-                F.element_at(vocab_arr, (F.col("rep") % len(VOCAB) + 1).cast("int")),
-                F.lit(" "),
-                F.col("name"),
-            ),
-        )
-        .withColumn("lat", F.col("lat") + F.col("rep") * 0.001)
-        .withColumn("lon", F.col("lon") + F.col("rep") * 0.001)
-        .drop("rep")
-    )
-
-
 def _noop(df: DataFrame) -> int:
     df.write.format("noop").mode("overwrite").save()
     return 0
 
 
 def build_suite(spark: SparkSession, sf_dir: str):
-    from mass_georeferencing_spark.functions import cells as C
     from mass_georeferencing_spark.operators import dedup, similarity
-    from mass_georeferencing_spark.operators.fuzzy_join import fuzzy_candidate_join
-    from mass_georeferencing_spark.operators.knn import knn_join
-    from mass_georeferencing_spark.operators.layers import (
-        explode_alternate_names,
-        normalize_candidates,
-    )
-    from mass_georeferencing_spark.operators.record_groups import build_record_groups, group_id
-    from mass_georeferencing_spark.operators.scoring import melt_scores, prune_low_scores
     from mass_georeferencing_spark.operators.spatial import pip_join
-    from mass_georeferencing_spark.operators.topk import topk_per_group
+    from mass_georeferencing_spark.plans.pipeline import georeference_frames
 
     pfactor = int(os.environ.get("SPARK_GRAFT_BENCH_FACTOR", "8"))
     gfactor = int(os.environ.get("SPARK_GRAFT_BENCH_GAZ_FACTOR", "2"))
 
-    pages = amplified_pages(spark, sf_dir, pfactor)
-    mentions = amplified_mentions(pages)
-    gaz = amplified_gazetteer(spark, sf_dir, gfactor)
+    pages = syn.amplified_pages(spark, sf_dir, pfactor)
+    mentions = syn.mentions_from_pages(pages)
+    gaz = syn.amplified_gazetteer(spark, sf_dir, gfactor)
     n_pages = pages.count()  # warms the file listing too
 
     def georeference_e2e():
-        groups = build_record_groups(mentions, coord_cols=("lat", "lon")).persist()
-        candidates = normalize_candidates(explode_alternate_names(gaz)).persist()
-        scored = fuzzy_candidate_join(
-            groups, candidates  # AQE picks the join-back strategy (measured faster than forced broadcast)
-        ).withColumn(
-            "candidate_id", group_id(F.col("recgroup_id"), F.col("uid"), F.col("data_source"))
-        )
-        top = topk_per_group(
-            scored,
-            partition_cols=["recgroup_id"],
-            order_cols=["score1", "score2", "score_state", "no_features"],
-        ).persist()  # melt + prune both consume it
-        kept = prune_low_scores(top, melt_scores(top))
-        return kept.withColumn(
-            "cell", C.latlng_to_cell_col(F.col("lat"), F.col("lon"), 12)
-        )
+        return georeference_frames(mentions, gaz)["kept"]
 
     def pip_cells():
         pts = mentions.where(F.col("lat").isNotNull())

@@ -2,15 +2,18 @@
 
 Usage (north rule: spark-submit --py-files at two cluster sizes):
 
-    cd /root/repo && zip -qr /tmp/mgs.zip mass_georeferencing_spark
-    spark-submit --master local[8]  --py-files /tmp/mgs.zip \
-        jobs/georeference_job.py --sf-dir /root/testdata/sf0.1 --out /tmp/mgs_out8
-    spark-submit --master local[32] --py-files /tmp/mgs.zip \
-        jobs/georeference_job.py --sf-dir /root/testdata/sf0.1 --out /tmp/mgs_out32
+    zip -qr mgs.zip mass_georeferencing_spark
+    spark-submit --master local[2] --py-files mgs.zip \
+        jobs/georeference_job.py --sf-dir <sf_dir> --amplify 8 --out <out_dir>
+    spark-submit --master local[8] --py-files mgs.zip \
+        jobs/georeference_job.py --sf-dir <sf_dir> --amplify 8 --checkpoint-dir <ck_dir>
 
 On a real cluster the master flag becomes the cluster manager and --py-files
 ships the same zip to executors; nothing in the package assumes local mode.
-Prints a one-line JSON summary (rows, wall seconds, pages/sec).
+``--amplify`` and ``--checkpoint-dir`` compose: a rerun with the same flags
+resumes from the committed stages, a rerun with other amplification factors
+rebuilds them. Prints a one-line JSON summary (rows, wall seconds, pages/sec,
+master, checkpoint stages built and skipped).
 """
 
 from __future__ import annotations
@@ -19,98 +22,59 @@ import argparse
 import json
 import time
 
+from mass_georeferencing_spark.plans.checkpoint import (
+    input_path_fingerprint,
+    run_georeference_checkpointed,
+)
+from mass_georeferencing_spark.plans.pipeline import georeference_frames
+from mass_georeferencing_spark.session import get_spark
+from mass_georeferencing_spark.sources import synthetic as syn
+
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--sf-dir", default="/root/testdata/sf0.001")
+    ap.add_argument("--sf-dir", required=True)
     ap.add_argument("--out", default=None, help="parquet output dir (omit: noop sink)")
     ap.add_argument("--checkpoint-dir", default=None, help="enable resumable stage checkpointing")
     ap.add_argument("--amplify", type=int, default=1, help="deterministic workload multiplier")
     ap.add_argument("--gaz-amplify", type=int, default=None, help="gazetteer multiplier (default amplify//4)")
     args = ap.parse_args()
+    gaz_amplify = args.gaz_amplify or max(args.amplify // 4, 1)
 
-    import os
-
-    from pyspark.sql import SparkSession
-
-    # same scale-tuned session defaults as session.get_spark (master/deploy come
-    # from spark-submit; these configs are no-ops if overridden via --conf)
-    cpus = os.cpu_count() or 8
-    spark = (
-        SparkSession.builder.appName("mass-georeferencing")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .getOrCreate()
-    )
+    # master and deploy mode come from spark-submit; get_spark keeps them
+    spark = get_spark(app_name="mass-georeferencing")
     # size reducer count to the data, NOT to this run's core count: the
     # scaling-evidence protocol runs the IDENTICAL plan at every parallelism
     # level, so the reducer count must stay constant across levels (floor 8,
-    # same as session.get_spark's bench default)
+    # same as bench.py)
     spark.conf.set(
         "spark.sql.shuffle.partitions",
         str(max(spark.sparkContext.defaultParallelism, 8)),
     )
     spark.sparkContext.setLogLevel("WARN")
 
-    t0 = time.time()
-    if args.checkpoint_dir:
-        from mass_georeferencing_spark.plans.checkpoint import run_georeference_checkpointed
-
-        kept, ck = run_georeference_checkpointed(spark, args.sf_dir, args.checkpoint_dir)
-        n_pages = None
-    elif args.amplify > 1:
-        import sys as _sys
-
-        _sys.path.insert(0, "/root/repo")
-        import bench  # amplified deterministic workload
-
-        from pyspark.sql import functions as F
-
-        from mass_georeferencing_spark.functions import cells as C
-        from mass_georeferencing_spark.operators.fuzzy_join import fuzzy_candidate_join
-        from mass_georeferencing_spark.operators.layers import (
-            explode_alternate_names,
-            normalize_candidates,
-        )
-        from mass_georeferencing_spark.operators.record_groups import (
-            build_record_groups,
-            group_id,
-        )
-        from mass_georeferencing_spark.operators.scoring import melt_scores, prune_low_scores
-        from mass_georeferencing_spark.operators.topk import topk_per_group
-
-        pages = bench.amplified_pages(spark, args.sf_dir, args.amplify)
-        mentions = bench.amplified_mentions(pages)
-        gaz = bench.amplified_gazetteer(
-            spark, args.sf_dir, args.gaz_amplify or max(args.amplify // 4, 1)
-        )
+    if args.amplify > 1:
+        pages = syn.amplified_pages(spark, args.sf_dir, args.amplify)
+        gazetteer = syn.amplified_gazetteer(spark, args.sf_dir, gaz_amplify)
         n_pages = pages.count()  # warm file listing + JIT outside the timer
-        t0 = time.time()
-        groups = build_record_groups(mentions, coord_cols=("lat", "lon")).persist()
-        candidates = normalize_candidates(explode_alternate_names(gaz)).persist()
-        scored = fuzzy_candidate_join(
-            groups, candidates  # join-back strategy: AQE decides from runtime sizes
-        ).withColumn(
-            "candidate_id",
-            group_id(F.col("recgroup_id"), F.col("uid"), F.col("data_source")),
-        )
-        top = topk_per_group(
-            scored,
-            partition_cols=["recgroup_id"],
-            order_cols=["score1", "score2", "score_state", "no_features"],
-        ).persist()
-        kept = prune_low_scores(top, melt_scores(top)).withColumn(
-            "cell", C.latlng_to_cell_col(F.col("lat"), F.col("lon"), 12)
-        )
     else:
-        from mass_georeferencing_spark.plans.pipeline import georeference
-
-        kept = georeference(spark, args.sf_dir)["kept"]
+        pages = syn.pages_df(spark, args.sf_dir)
+        gazetteer = syn.gazetteer_df(spark, args.sf_dir)
         n_pages = None
+    mentions = syn.mentions_from_pages(pages)
+
+    t0 = time.time()
+    stages = {}
+    if args.checkpoint_dir:
+        fingerprint = (
+            f"{input_path_fingerprint(args.sf_dir)}:amplify={args.amplify},{gaz_amplify}"
+        )
+        kept, ck = run_georeference_checkpointed(
+            mentions, gazetteer, args.checkpoint_dir, fingerprint
+        )
+        stages = {"stages_built": ck.stages_built, "stages_skipped": ck.stages_skipped}
+    else:
+        kept = georeference_frames(mentions, gazetteer)["kept"]
 
     if args.out:
         kept.write.mode("overwrite").parquet(args.out)
@@ -127,6 +91,7 @@ def main() -> None:
                 "n_pages": n_pages,
                 "pages_per_sec": round(n_pages / wall, 1) if n_pages else None,
                 "master": spark.sparkContext.master,
+                **stages,
             }
         )
     )

@@ -181,16 +181,6 @@ def token_set_ratio_udf(a: pd.Series, b: pd.Series) -> pd.Series:
     )
 
 
-@F.pandas_udf(DoubleType())
-def ratio_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    return pd.Series(
-        fuzzy_batch.batch_ratio(
-            a.fillna("").astype(str).tolist(), b.fillna("").astype(str).tolist()
-        ),
-        index=a.index,
-    )
-
-
 def fuzzy_candidate_join(
     groups: DataFrame,
     candidates: DataFrame,
@@ -203,10 +193,7 @@ def fuzzy_candidate_join(
     threshold: float = FUZZY_SUM_THRESHOLD,
     with_state: bool = True,
     dedup_pairs: bool | str = True,
-    broadcast_candidates: bool = False,
-    broadcast_scored_pairs: bool = False,
     salt: int | None = None,
-    prune: bool = True,
 ) -> DataFrame:
     """Blocked fuzzy theta-join: groups × candidates within block, scored and
     thresholded (functions.py:258-292).
@@ -235,10 +222,8 @@ def fuzzy_candidate_join(
             "_salt", F.pmod(F.xxhash64(F.col(query_col)), F.lit(salt)).cast("int")
         )
         block_keys = [*block_keys, "_salt"]
-    if broadcast_candidates:
-        cand = F.broadcast(cand)
 
-    scores_udf = make_fuzzy_scores_udf(threshold if prune else None)
+    scores_udf = make_fuzzy_scores_udf(threshold)
     if dedup_pairs:
         # Dedup-before-score, restated for scale:
         # 1. the pair space is DISTINCT queries × DISTINCT names per block —
@@ -287,10 +272,6 @@ def fuzzy_candidate_join(
             )
             .where(F.col("score1") + F.col("score2") > F.lit(threshold))
         )
-        if broadcast_scored_pairs:
-            # force-broadcast when the caller KNOWS the surviving set is small;
-            # default False lets AQE decide from the measured size
-            scored_pairs = F.broadcast(scored_pairs)
         scored = groups.join(
             scored_pairs, on=[*block_keys, query_col, query_nostop_col]
         ).join(cand, on=[*block_keys, name_col])

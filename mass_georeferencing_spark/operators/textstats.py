@@ -10,7 +10,6 @@ char-trigram profile kernel in an Arrow batch UDF.
 
 from __future__ import annotations
 
-import zlib
 from collections import Counter
 
 import pandas as pd
@@ -170,7 +169,7 @@ def quality_score(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# document fingerprint (JVM md5 + winnowing kernel)
+# document fingerprint (JVM md5)
 # ---------------------------------------------------------------------------
 
 
@@ -180,25 +179,6 @@ def content_fingerprint(text: Column) -> Column:
 
 
 FINGERPRINT_SQL = "md5(regexp_replace(lower(trim({t})), '\\s+', ' ', 'g'))"
-
-
-def winnowing_fingerprints(text: str, k: int = 8, window: int = 4) -> list[int]:
-    """Winnowing (Schleimer et al. 2003): min crc32 hash per sliding window of
-    k-gram hashes — position-robust local fingerprints for near-dup detection."""
-    b = text.encode("utf-8", "ignore")
-    if len(b) < k:
-        return [zlib.crc32(b)] if b else []
-    hashes = [zlib.crc32(b[i : i + k]) for i in range(len(b) - k + 1)]
-    if len(hashes) <= window:
-        return [min(hashes)]
-    out: list[int] = []
-    prev = -1
-    for i in range(len(hashes) - window + 1):
-        m = min(hashes[i : i + window])
-        if m != prev:
-            out.append(m)
-            prev = m
-    return out
 
 
 # ---------------------------------------------------------------------------

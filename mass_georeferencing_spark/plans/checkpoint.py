@@ -268,56 +268,27 @@ class CheckpointRunner:
 
 
 def run_georeference_checkpointed(
-    spark: SparkSession,
-    sf_dir: str,
+    mentions: DataFrame,
+    gazetteer: DataFrame,
     base_dir: str,
+    input_fingerprint: str,
     run_id: str = "run",
 ) -> tuple[DataFrame, CheckpointRunner]:
-    """The pipeline as resumable stages (each stage re-reads the previous
-    stage's committed parquet, so a resume never recomputes upstream work)."""
-    from ..functions import cells as C
-    from ..operators.fuzzy_join import fuzzy_candidate_join
-    from ..operators.layers import explode_alternate_names, normalize_candidates
-    from ..operators.record_groups import build_record_groups, group_id
-    from ..operators.scoring import melt_scores, prune_low_scores
-    from ..operators.topk import topk_per_group
-    from ..sources import synthetic
+    """:func:`plans.pipeline.georeference_frames` with its stages (groups,
+    candidates, top) and ``kept`` committed as resumable checkpoints: each
+    stage re-reads the previous stage's committed parquet, so a resume never
+    recomputes upstream work. ``input_fingerprint`` identifies the sources
+    (e.g. :func:`input_path_fingerprint` of the input directory plus any
+    amplification) so changed sources invalidate the source stages."""
+    from .pipeline import georeference_frames
 
-    ck = CheckpointRunner(spark, base_dir, run_id)
+    ck = CheckpointRunner(mentions.sparkSession, base_dir, run_id)
 
-    # source stages carry an input fingerprint so resuming the same run_id
-    # after the sf_dir data changes invalidates (content-addressed, like the
-    # snapshot-id a real Iceberg source would pass)
-    src_fp = input_path_fingerprint(sf_dir)
-    groups = ck.run_stage(
-        "groups",
-        lambda: build_record_groups(synthetic.mentions_df(spark, sf_dir), coord_cols=("lat", "lon")),
-        input_fingerprint=src_fp,
-    )
-    candidates = ck.run_stage(
-        "candidates",
-        lambda: normalize_candidates(explode_alternate_names(synthetic.gazetteer_df(spark, sf_dir))),
-        input_fingerprint=src_fp,
-    )
-    top = ck.run_stage(
-        "top",
-        lambda: topk_per_group(
-            fuzzy_candidate_join(groups, candidates).withColumn(
-                "candidate_id",
-                group_id(F.col("recgroup_id"), F.col("uid"), F.col("data_source")),
-            ),
-            partition_cols=["recgroup_id"],
-            order_cols=["score1", "score2", "score_state", "no_features"],
-        ),
-        upstream=["groups", "candidates"],
-        partition_by="lang",
-    )
-    kept = ck.run_stage(
-        "kept",
-        lambda: prune_low_scores(top, melt_scores(top)).withColumn(
-            "cell", C.latlng_to_cell_col(F.col("lat"), F.col("lon"), C.DEFAULT_POINT_RES)
-        ),
-        upstream=["top"],
-        partition_by="lang",
-    )
+    def stage(name: str, build: Callable[[], DataFrame], upstream: list[str]) -> DataFrame:
+        if upstream:
+            return ck.run_stage(name, build, upstream=upstream, partition_by="lang")
+        return ck.run_stage(name, build, input_fingerprint=input_fingerprint)
+
+    frames = georeference_frames(mentions, gazetteer, stage=stage)
+    kept = ck.run_stage("kept", lambda: frames["kept"], upstream=["top"], partition_by="lang")
     return kept, ck

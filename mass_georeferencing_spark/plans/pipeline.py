@@ -11,6 +11,12 @@ batch_georeferencing/batch_georeferencing.py:129-499) collapses to ONE dataflow:
         → per-group candidate counts (A5) → drop empty groups
         → tile/cell assignments (F14) for every kept candidate
 
+This module is the only place the chain is written. :func:`georeference_frames`
+takes the source frames; :func:`georeference` reads them from the synthetic
+derivation, the bench and the spark-submit job pass amplified ones, and the
+checkpoint runner (plans/checkpoint.py) passes a ``stage`` callable that
+commits the materialized stages instead of caching them.
+
 Shuffles: the group-by (A1), the block-key join (J1, broadcast when the gazetteer
 slice is small), the pair-dedup + join-back, the top-k window (hash on
 recgroup_id), and the final mean aggregation — each on a key the next stage
@@ -19,15 +25,17 @@ reuses. Everything else is narrow.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import cells as C
+from ..functions.geo import haversine_col
 from ..operators.fuzzy_join import fuzzy_candidate_join
 from ..operators.layers import explode_alternate_names, normalize_candidates
 from ..operators.record_groups import build_record_groups, group_id
 from ..operators.scoring import (
-    MIN_SCORE,
     distance_band_score,
     drop_empty_groups,
     group_candidate_counts,
@@ -35,71 +43,76 @@ from ..operators.scoring import (
     melt_scores,
     prune_low_scores,
 )
-from ..operators.topk import TOP_K, topk_per_group
+from ..operators.topk import topk_per_group
 from ..sources import synthetic
 
+# stage(name, build, upstream) -> the materialized frame of ``build()``;
+# ``upstream`` names the stages the build reads
+Stage = Callable[[str, Callable[[], DataFrame], list[str]], DataFrame]
 
-def georeference(
-    spark: SparkSession,
-    sf_dir: str,
-    min_score: float = MIN_SCORE,
-    top_k: int = TOP_K,
-    spatial: bool = True,
+
+def persist_stage(name: str, build: Callable[[], DataFrame], upstream: list[str]) -> DataFrame:
+    """Default materialization: cache in memory. Each staged frame feeds two
+    plan subtrees of one action, so without it the subtree runs twice."""
+    return build().persist()
+
+
+def georeference_frames(
+    mentions: DataFrame,
+    gazetteer: DataFrame,
+    elevation: DataFrame | None = None,
     range_scoring: bool = False,
-    elevation_scoring: bool = False,
     elevation_strategy: str = "broadcast",
-    broadcast_candidates: bool = False,
-    cell_res: int = C.DEFAULT_POINT_RES,
+    stage: Stage = persist_stage,
 ) -> dict[str, DataFrame]:
-    """Run the full pipeline over the synthetic pages/gazetteer derivation.
+    """Run the full pipeline over geoparsed ``mentions`` and the normalized
+    ``gazetteer`` union (the shapes of ``sources.synthetic``).
 
-    Returns the intermediate + final DataFrames keyed by stage name (the
-    checkpoint runner in plans/checkpoint.py persists these per stage).
+    Passing an ``elevation`` grid (grid_id, lat, lon, elev_m) turns on
+    elevation scoring. ``stage`` materializes ``groups``, ``candidates`` and
+    ``top``. Returns the intermediate + final DataFrames keyed by stage name.
     """
-    mentions = synthetic.mentions_df(spark, sf_dir)
     # both sides feed two plan subtrees each (distinct-pair build + blocked
-    # join), so persist once — at scale these are the SMALL relations
-    groups = build_record_groups(mentions, coord_cols=("lat", "lon")).persist()
+    # join) — at scale these are the SMALL relations
+    groups = stage(
+        "groups", lambda: build_record_groups(mentions, coord_cols=("lat", "lon")), []
+    )
+    candidates = stage(
+        "candidates", lambda: normalize_candidates(explode_alternate_names(gazetteer)), []
+    )
 
-    gaz = synthetic.gazetteer_df(spark, sf_dir)
-    candidates = normalize_candidates(explode_alternate_names(gaz)).persist()
+    scored = fuzzy_candidate_join(groups, candidates, block_keys=["lang"]).withColumn(
+        "candidate_id", group_id(F.col("recgroup_id"), F.col("uid"), F.col("data_source"))
+    )
 
-    scored = fuzzy_candidate_join(
-        groups,
-        candidates,
-        block_keys=["lang"],
-        broadcast_candidates=broadcast_candidates,
-    ).withColumn("candidate_id", group_id(F.col("recgroup_id"), F.col("uid"), F.col("data_source")))
+    # consumed by both the EAV melt and the prune join — without staging it
+    # the fuzzy-join subtree executes twice in one action
+    top = stage(
+        "top",
+        lambda: topk_per_group(
+            scored,
+            partition_cols=["recgroup_id"],
+            order_cols=["score1", "score2", "score_state", "no_features"],
+        ),
+        ["groups", "candidates"],
+    )
 
-    top = topk_per_group(
-        scored,
-        partition_cols=["recgroup_id"],
-        order_cols=["score1", "score2", "score_state", "no_features"],
-        k=top_k,
-    ).persist()  # consumed by both the EAV melt and the prune join — without
-    # this the fuzzy-join subtree executes twice in one action
+    dist = haversine_col(F.col("group_lon"), F.col("group_lat"), F.col("lon"), F.col("lat"))
+    top = top.withColumn(
+        "score_spatial",
+        F.when(
+            F.col("group_lat").isNotNull() & F.col("lat").isNotNull(),
+            distance_band_score(dist).cast("double"),
+        ),
+    )
+    score_cols = {
+        "locality.partial_ratio": "score1",
+        "locality.token_set_ratio": "score2",
+        "stateprovince": "score_state",
+        "locality.spatial": "score_spatial",  # functions.py:60
+    }
 
-    if spatial:
-        from ..functions.geo import haversine_col
-
-        dist = haversine_col(F.col("group_lon"), F.col("group_lat"), F.col("lon"), F.col("lat"))
-        top = top.withColumn(
-            "score_spatial",
-            F.when(
-                F.col("group_lat").isNotNull() & F.col("lat").isNotNull(),
-                distance_band_score(dist).cast("double"),
-            ),
-        )
-        score_cols = {
-            "locality.partial_ratio": "score1",
-            "locality.token_set_ratio": "score2",
-            "stateprovince": "score_state",
-            "locality.spatial": "score_spatial",  # functions.py:60
-        }
-    else:
-        score_cols = None
-
-    if elevation_scoring:
+    if elevation is not None:
         # the reference's elevation disambiguation (J6, functions.py:145-230,
         # call site commented at batch_georeferencing.py:500-513): candidate →
         # nearest elevation sample → banded |claimed − sampled| score.
@@ -110,7 +123,7 @@ def georeference(
         from ..operators.knn import knn_join, knn_join_broadcast
         from ..operators.scoring import elevation_band_score
 
-        elev = synthetic.elevation_grid_df(spark, sf_dir).select(
+        elev = elevation.select(
             F.col("grid_id").alias("target_id"),
             F.col("lat").alias("target_lat"),
             F.col("lon").alias("target_lon"),
@@ -164,15 +177,13 @@ def georeference(
             lat_col="cand_lat",
             lon_col="cand_lon",
         ).withColumnRenamed("cand_lat", "lat").withColumnRenamed("cand_lon", "lon")
-        if score_cols is not None:
-            score_cols = {**score_cols, "locality.range": "score_range"}
-    if elevation_scoring and score_cols is not None:
-        score_cols = {**score_cols, "elevation": "score_elevation"}  # functions.py:179
+        score_cols["locality.range"] = "score_range"
+    if elevation is not None:
+        score_cols["elevation"] = "score_elevation"  # functions.py:179
 
     scores_long = melt_scores(top, score_cols=score_cols)
-    kept = prune_low_scores(top, scores_long, min_score=min_score)
-    kept = kept.withColumn(
-        "cell", C.latlng_to_cell_col(F.col("lat"), F.col("lon"), cell_res)
+    kept = prune_low_scores(top, scores_long).withColumn(
+        "cell", C.latlng_to_cell_col(F.col("lat"), F.col("lon"), C.DEFAULT_POINT_RES)
     )
 
     groups_with_counts = drop_empty_groups(group_candidate_counts(kept, groups))
@@ -189,6 +200,13 @@ def georeference(
         "means": means,
         "groups_final": groups_with_counts,
     }
+
+
+def georeference(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
+    """The pipeline over the synthetic pages/gazetteer derivation of ``sf_dir``."""
+    return georeference_frames(
+        synthetic.mentions_df(spark, sf_dir), synthetic.gazetteer_df(spark, sf_dir)
+    )
 
 
 def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:

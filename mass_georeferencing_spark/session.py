@@ -24,12 +24,15 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
-    master = master or f"local[{cpus}]"
+    # a driver launched by spark-submit attaches to the submitting JVM
+    # (PYSPARK_GATEWAY_PORT), whose --master stands unless one is passed here
+    if master is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
+        master = f"local[{cpus}]"
     if shuffle_partitions is None:
         shuffle_partitions = cpus
+    builder = SparkSession.builder if master is None else SparkSession.builder.master(master)
     builder = (
-        SparkSession.builder.master(master)
-        .appName(app_name)
+        builder.appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -32,7 +32,7 @@ All arithmetic uses nonnegative integer keys so ``%`` agrees across dialects.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .tables import load_table
@@ -109,7 +109,7 @@ def _mention_slot(pages: DataFrame, pat: str) -> DataFrame:
     ).where(F.col("mention") != "")
 
 
-def mentions_df(spark: SparkSession, sf_dir: str) -> DataFrame:
+def mentions_from_pages(pages: DataFrame) -> DataFrame:
     """pages → mentions(url, lang, doc_id, mention, state, lat, lon).
 
     The geoparse analog of the reference's locality column: slot 1 = words 1-2,
@@ -117,10 +117,14 @@ def mentions_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     FIXTURES.md §1). ``state`` = word 3 (plays ``stateprovince``); ``lang`` plays
     the blocking role of ``countrycode`` (batch_georeferencing.py:132-138).
     """
-    pages = pages_df(spark, sf_dir)
     s1 = _mention_slot(pages, r"^(\w+ \w+)")
     s2 = _mention_slot(pages, r"^\w+ \w+ \w+ (\w+ \w+)")
     return s1.unionByName(s2)
+
+
+def mentions_df(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The mentions of the pages derived from ``sf_dir``."""
+    return mentions_from_pages(pages_df(spark, sf_dir))
 
 
 MENTIONS_CTE = f"""
@@ -221,6 +225,59 @@ gazetteer AS (
          1
   FROM nation JOIN region ON n_regionkey = r_regionkey
 )"""
+
+
+# ---------------------------------------------------------------------------
+# amplified sources — pages and gazetteer × factor with deterministic text
+# mutation: replica r prepends a vocab word, shifting every mention/name
+# extraction, so disjoint replica 'dialects' keep the pair space realistic
+# instead of factor² duplicates. Pure JVM, no external data.
+# ---------------------------------------------------------------------------
+
+REPLICA_VOCAB = (
+    "alpha bravo charlie delta echo foxtrot golf hotel india juliett kilo lima "
+    "mike november oscar papa quebec romeo sierra tango"
+).split()
+
+
+def _replicate(df: DataFrame, factor: int) -> DataFrame:
+    """``df`` × ``factor`` with a ``rep`` index column. The small
+    pre-amplification side is spread first: the testdata parquet is one file →
+    one scan partition, which the crossJoin (tiny replica side broadcast) would
+    inherit and serialize. A real web-scale input arrives in thousands of
+    splits."""
+    spark = df.sparkSession
+    reps = spark.range(factor).withColumnRenamed("id", "rep")
+    return df.repartition(spark.sparkContext.defaultParallelism).crossJoin(reps)
+
+
+def _replica_prefix(text: Column) -> Column:
+    vocab = F.array(*[F.lit(w) for w in REPLICA_VOCAB])
+    word = F.element_at(vocab, (F.col("rep") % len(REPLICA_VOCAB) + 1).cast("int"))
+    return F.concat(word, F.lit(" "), text)
+
+
+def amplified_pages(spark: SparkSession, sf_dir: str, factor: int) -> DataFrame:
+    """pages × ``factor``; feed to :func:`mentions_from_pages`."""
+    return (
+        _replicate(pages_df(spark, sf_dir), factor)
+        .withColumn("doc_id", F.col("doc_id") * factor + F.col("rep"))
+        .withColumn("url", F.concat(F.col("url"), F.lit("/r"), F.col("rep")))
+        .withColumn("text", _replica_prefix(F.col("text")))
+        .drop("rep")
+    )
+
+
+def amplified_gazetteer(spark: SparkSession, sf_dir: str, factor: int) -> DataFrame:
+    """gazetteer × ``factor``; replica coordinates shift by 0.001° per replica."""
+    return (
+        _replicate(gazetteer_df(spark, sf_dir), factor)
+        .withColumn("uid", F.concat(F.col("uid"), F.lit("/r"), F.col("rep")))
+        .withColumn("name", _replica_prefix(F.col("name")))
+        .withColumn("lat", F.col("lat") + F.col("rep") * 0.001)
+        .withColumn("lon", F.col("lon") + F.col("rep") * 0.001)
+        .drop("rep")
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -1,12 +1,17 @@
 """Checkpoint/resume tests: kill-and-resume recomputes nothing committed;
 lineage change invalidates downstream stages (north rule O8)."""
 
+import os
+
 import pytest
 
 from mass_georeferencing_spark.plans.checkpoint import (
     CheckpointRunner,
+    input_path_fingerprint,
     run_georeference_checkpointed,
 )
+from mass_georeferencing_spark.plans.pipeline import georeference
+from mass_georeferencing_spark.sources import synthetic as syn
 
 from conftest import SF_DIR
 
@@ -76,16 +81,44 @@ def test_manifest_metrics(spark, tmp_path):
     assert "schema" in m and "wall_s" in m
 
 
+def _checkpointed(spark, base_dir):
+    return run_georeference_checkpointed(
+        syn.mentions_df(spark, SF_DIR),
+        syn.gazetteer_df(spark, SF_DIR),
+        base_dir,
+        input_path_fingerprint(SF_DIR),
+        "pipe",
+    )
+
+
 def test_pipeline_kill_and_resume(spark, tmp_path):
-    kept1, ck1 = run_georeference_checkpointed(spark, SF_DIR, str(tmp_path), "pipe")
+    kept1, ck1 = _checkpointed(spark, str(tmp_path))
     n1 = kept1.count()
     assert n1 > 0
     assert set(ck1.stages_built) == {"groups", "candidates", "top", "kept"}
 
-    kept2, ck2 = run_georeference_checkpointed(spark, SF_DIR, str(tmp_path), "pipe")
+    kept2, ck2 = _checkpointed(spark, str(tmp_path))
     assert ck2.stages_built == []
     assert set(ck2.stages_skipped) == {"groups", "candidates", "top", "kept"}
     assert kept2.count() == n1
+
+
+def test_checkpointed_equals_in_memory(spark, tmp_path):
+    # the checkpoint runner wraps the same chain: spatial scoring included
+    cols = ["recgroup_id", "uid", "data_source", "mean_score", "score_spatial"]
+    kept, _ = _checkpointed(spark, str(tmp_path))
+    got = sorted(map(tuple, kept.select(*cols).collect()))
+    want = sorted(map(tuple, georeference(spark, SF_DIR)["kept"].select(*cols).collect()))
+    assert got == want
+
+
+def test_pipeline_partial_resume(spark, tmp_path):
+    _checkpointed(spark, str(tmp_path))
+    os.remove(os.path.join(str(tmp_path), "pipe", "kept", "_mgs_manifest.json"))
+    kept, ck = _checkpointed(spark, str(tmp_path))
+    assert ck.stages_built == ["kept"]
+    assert set(ck.stages_skipped) == {"groups", "candidates", "top"}
+    assert kept.count() > 0
 
 
 def test_input_fingerprint_invalidates_on_data_change(spark, tmp_path):

@@ -23,21 +23,6 @@ def test_dedup_vs_blocked_product_equal(spark):
     assert dedup == blocked
 
 
-def test_broadcast_flags_equal(spark):
-    groups = build_record_groups(syn.mentions_df(spark, SF_DIR))
-    cands = normalize_candidates(syn.gazetteer_df(spark, SF_DIR))
-    a = sorted(map(_key, fuzzy_candidate_join(groups, cands).collect()))
-    b = sorted(
-        map(
-            _key,
-            fuzzy_candidate_join(
-                groups, cands, broadcast_candidates=True, broadcast_scored_pairs=True
-            ).collect(),
-        )
-    )
-    assert a == b
-
-
 def test_empty_sides(spark):
     groups = build_record_groups(syn.mentions_df(spark, SF_DIR))
     cands = normalize_candidates(syn.gazetteer_df(spark, SF_DIR))

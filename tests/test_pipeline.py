@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 from mass_georeferencing_spark.operators.fuzzy_join import FUZZY_SUM_THRESHOLD
 from mass_georeferencing_spark.operators.scoring import MIN_SCORE
 from mass_georeferencing_spark.operators.topk import TOP_K
-from mass_georeferencing_spark.plans.pipeline import georeference
+from mass_georeferencing_spark.plans.pipeline import georeference, georeference_frames
 from mass_georeferencing_spark.sources import synthetic as syn
 
 from conftest import SF_DIR
@@ -17,6 +17,10 @@ from conftest import SF_DIR
 @pytest.fixture(scope="module")
 def result(spark):
     return georeference(spark, SF_DIR)
+
+
+def _sources(spark):
+    return syn.mentions_df(spark, SF_DIR), syn.gazetteer_df(spark, SF_DIR)
 
 
 def test_threshold_invariant(result):
@@ -82,7 +86,7 @@ def test_cell_assignment_valid(result):
 
 def test_range_scoring_mode(spark):
     # the reference's spatial_match flag (settings.py.template:9, J5)
-    out = georeference(spark, SF_DIR, range_scoring=True)
+    out = georeference_frames(*_sources(spark), range_scoring=True)
     kept = out["kept"]
     assert "score_range" in kept.columns
     scored = kept.where(F.col("score_range").isNotNull())
@@ -93,7 +97,7 @@ def test_range_scoring_mode(spark):
 
 def test_elevation_scoring_mode(spark):
     # reference: elevation disambiguation J6 (functions.py:145-230)
-    out = georeference(spark, SF_DIR, elevation_scoring=True)
+    out = georeference_frames(*_sources(spark), elevation=syn.elevation_grid_df(spark, SF_DIR))
     kept = out["kept"]
     assert "score_elevation" in kept.columns
     scored = kept.where(F.col("score_elevation").isNotNull())
@@ -127,8 +131,10 @@ def test_elevation_strategy_rings_equals_broadcast(spark):
     # 'rings' (cell-ring-expansion kNN, web-scale grid path) must reproduce the
     # broadcast kNN's pipeline output exactly
     def fetch(strategy):
-        kept = georeference(
-            spark, SF_DIR, elevation_scoring=True, elevation_strategy=strategy
+        kept = georeference_frames(
+            *_sources(spark),
+            elevation=syn.elevation_grid_df(spark, SF_DIR),
+            elevation_strategy=strategy,
         )["kept"]
         return sorted(
             (r.recgroup_id, r.uid, r.data_source, r.score_elevation, r.mean_score)

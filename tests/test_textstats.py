@@ -40,15 +40,6 @@ def test_fingerprint_normalization_stable(spark):
     assert out[1] != out[3]
 
 
-def test_winnowing_fingerprints():
-    fps1 = textstats.winnowing_fingerprints("the quick brown fox jumps over the lazy dog")
-    # content shifted by a prefix shares most local fingerprints
-    fps2 = textstats.winnowing_fingerprints("PREFIX the quick brown fox jumps over the lazy dog")
-    overlap = len(set(fps1) & set(fps2)) / len(set(fps1))
-    assert overlap > 0.7
-    assert textstats.winnowing_fingerprints("") == []
-
-
 def test_lang_profile_sample_guard(spark):
     # the profile-training collect is bounded fail-loud: an over-cap
     # max_sample raises instead of attempting a driver-OOM-sized toPandas

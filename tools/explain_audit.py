@@ -78,15 +78,15 @@ def main() -> int:
     j = nation.join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
     ok &= audit("dim_join", j, ["broadcast_join", "codegen"])
 
-    # 3. fuzzy join: Arrow UDF only at the scoring point, broadcast join-back
+    # 3. the default fuzzy join (broadcast pair generator, Arrow UDFs the only
+    #    Python boundary) and 9. the e2e candidate_id join-backs (never forced
+    #    broadcast) are tier-1 tests: tests/test_plan_shape.py
     from mass_georeferencing_spark.operators.fuzzy_join import fuzzy_candidate_join
     from mass_georeferencing_spark.operators.layers import normalize_candidates
     from mass_georeferencing_spark.operators.record_groups import build_record_groups
 
     groups = build_record_groups(syn.mentions_df(spark, sf))
     cands = normalize_candidates(syn.gazetteer_df(spark, sf))
-    scored = fuzzy_candidate_join(groups, cands, broadcast_candidates=True)
-    ok &= audit("fuzzy_join", scored, ["broadcast_join", "arrow_udf", "codegen"])
 
     # 4. cell equi-join PIP: generator + hash join on cell
     from mass_georeferencing_spark.operators.spatial import pip_join
@@ -142,21 +142,6 @@ def main() -> int:
     )
     fb = signflip_knn_fallback(pts12, aoi, k=3)
     ok &= audit("j12_knn_fallback", fb, ["arrow_udf", "codegen"])
-
-    # 9. e2e pipeline: NO forced broadcast on any per-candidate-cardinality
-    #    join-back (candidate_id sides grow with data — top-k × #groups —
-    #    so they must be AQE-decided, not hinted). With AQE off and no hint,
-    #    an unhinted candidate_id join statically plans as SortMergeJoin;
-    #    any BroadcastHashJoin keyed on candidate_id here means someone
-    #    re-added an F.broadcast on a growing side.
-    from mass_georeferencing_spark.plans.pipeline import georeference
-
-    e2e = georeference(spark, sf, elevation_scoring=True)["kept"]
-    plan = plan_of(e2e)
-    forced = re.findall(r"BroadcastHashJoin \[candidate_id", plan)
-    print("== e2e_joinbacks ==")
-    print(f"  no_forced_candidate_broadcast: {'OK' if not forced else 'MISSING'}")
-    ok &= not forced
 
     # 10. training-prep corpus: quality metrics/filters are JVM codegen; the
     #     only Python boundaries are the designed lang-ID ArrowEval and the
