@@ -18,9 +18,14 @@ Scale design (100 TB):
    block — the distinct query side is repartitioned round-robin and the distinct
    name side broadcast-joined onto it, so the pair space is generated, scored,
    and threshold-filtered in ONE fully parallel stage with no pair-level shuffle.
-2. **Vectorized scoring**: the bit-parallel LCS DP runs as uint64 numpy ops over
-   the whole Arrow batch (functions/fuzzy_batch.py), chunked to stay L2-resident.
-   No per-row Python dispatch (input_hint).
+2. **Vectorized scoring, once per pair**: every kernel runs in one opaque
+   ``mapInArrow`` pass (:func:`_map_scores`) that reads the batch's string
+   columns straight from Arrow (no pandas), appends the scores and, for J1,
+   yields only pairs with score1 + score2 > threshold. A scoring UDF in a
+   projection ran twice: Catalyst pushes filters on its output below the
+   projection (NOTES lesson 9). The bit-parallel LCS DP runs as uint64 numpy
+   ops over the whole batch (functions/fuzzy_batch.py), chunked to stay
+   L2-resident. No per-row Python dispatch (input_hint).
 3. **Threshold-before-join-back**: only surviving pairs (orders of magnitude
    fewer) join back as groups ⋈ pairs ⋈ candidates — the blocked cross product
    is never materialized, and both join-backs are broadcast-able (AQE promotes
@@ -36,8 +41,10 @@ Scale design (100 TB):
 
 from __future__ import annotations
 
+from collections.abc import Callable, Iterator
+
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
@@ -45,13 +52,6 @@ from pyspark.sql.types import DoubleType, StructField, StructType
 from ..functions import fuzzy, fuzzy_batch
 
 FUZZY_SUM_THRESHOLD = 140.0  # functions.py:292 (score1 + score2 > 140)
-
-_SCORE_SCHEMA = StructType(
-    [
-        StructField("score1", DoubleType()),
-        StructField("score2", DoubleType()),
-    ]
-)
 
 
 def _char_counts(s: str) -> dict[str, int]:
@@ -103,23 +103,20 @@ def score_pair(
 
 
 def _score_batch(
-    qf: pd.Series, qn: pd.Series, nm: pd.Series, threshold: float | None
-) -> pd.DataFrame:
-    """Vectorized batch scoring (functions/fuzzy_batch.py): the bit-parallel
-    LCS DP runs as uint64 numpy ops across the whole Arrow batch.
+    qf: list[str], qn: list[str], nm: list[str], threshold: float
+) -> tuple[np.ndarray, np.ndarray]:
+    """(score1, score2) of each pair, vectorized (functions/fuzzy_batch.py):
+    the bit-parallel LCS DP runs as uint64 numpy ops across the whole batch.
 
-    With a ``threshold`` (the downstream ``score1 + score2 > threshold``
-    filter), the cheap token_set kernel runs FIRST and the expensive
+    Exact for every pair that can pass ``score1 + score2 > threshold``; the
+    caller (:func:`_score_batches`) applies that filter to these scores in the
+    same pass. The cheap token_set kernel runs FIRST and the expensive
     window-scanning partial_ratio runs only for pairs that could still pass:
     score1 ≤ 100 always, so score2 ≤ threshold − 100 means the pair is dropped
     either way and its score1 short-circuits to 0 — the same soundness
     argument as :func:`score_pair`'s scalar prune. On blocked pair spaces most
-    pairs are dissimilar, so most skip the partial_ratio scan entirely.
-    ``threshold=None`` keeps both scores exact for every pair."""
-    a = qf.fillna("").astype(str).tolist()
-    b = qn.fillna("").astype(str).tolist()
-    c = nm.fillna("").astype(str).tolist()
-    n = len(a)
+    pairs are dissimilar, so most skip the partial_ratio scan entirely."""
+    n = len(qf)
     # 4k-pair chunks keep each worker's bitmask tables L2-resident; full-batch
     # vectors thrash the shared LLC when every core scores at once (measured
     # 2x loss at 32 cores on one socket)
@@ -128,57 +125,71 @@ def _score_batch(
     s2 = np.empty(n, dtype=np.float64)
     for i in range(0, n, chunk):
         j = min(i + chunk, n)
-        s2[i:j] = fuzzy_batch.batch_token_set_ratio(b[i:j], c[i:j])
-    if threshold is None:
-        need = np.arange(n)
-    else:
-        # token_set-first prune: score1 ≤ 100 always, so s2 ≤ threshold − 100
-        # means the pair fails the downstream sum filter either way and its
-        # score1 short-circuits to 0 (same soundness as score_pair's prune)
-        need = np.nonzero(s2 > threshold - 100.0)[0]
+        s2[i:j] = fuzzy_batch.batch_token_set_ratio(qn[i:j], nm[i:j])
+    need = np.nonzero(s2 > threshold - 100.0)[0]
     if len(need):
         # window-scan cost per chunk is max(len(name)) · max(len(query)) over
         # the CHUNK: length-sort the surviving pairs so same-length pairs
         # share chunks and no short pair pays a long pair's window count
         # (per-pair results are independent — order is a pure perf knob)
-        order = need[np.argsort([len(c[k]) * 64 + len(a[k]) for k in need], kind="stable")]
+        order = need[np.argsort([len(nm[k]) * 64 + len(qf[k]) for k in need], kind="stable")]
         for i in range(0, len(order), chunk):
             sub = order[i : i + chunk]
             s1[sub] = fuzzy_batch.batch_partial_ratio(
-                [a[k] for k in sub], [c[k] for k in sub]
+                [qf[k] for k in sub], [nm[k] for k in sub]
             )
-    return pd.DataFrame({"score1": s1, "score2": s2}, index=qf.index)
+    return s1, s2
 
 
-def make_fuzzy_scores_udf(threshold: float | None = FUZZY_SUM_THRESHOLD):
-    """Build the scoring UDF; ``threshold`` enables the prune short-circuit and
-    MUST equal the downstream filter's threshold (None disables pruning)."""
-
-    @F.pandas_udf(_SCORE_SCHEMA)
-    def fuzzy_scores(qf: pd.Series, qn: pd.Series, nm: pd.Series) -> pd.DataFrame:
-        return _score_batch(qf, qn, nm, threshold)
-
-    return fuzzy_scores
+def _texts(rb: pa.RecordBatch, col: str) -> list[str]:
+    """One string column of an Arrow batch as Python strs, NULL → '' (the
+    kernels score a NULL string as '')."""
+    return [s or "" for s in rb.column(col).to_numpy(zero_copy_only=False).tolist()]
 
 
-@F.pandas_udf(DoubleType())
-def partial_ratio_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    return pd.Series(
-        fuzzy_batch.batch_partial_ratio(
-            a.fillna("").astype(str).tolist(), b.fillna("").astype(str).tolist()
-        ),
-        index=a.index,
-    )
+def _score_batches(
+    batches: Iterator[pa.RecordBatch],
+    kernel: Callable,
+    cols: list[str],
+    out: list[str],
+    threshold: float | None = None,
+) -> Iterator[pa.RecordBatch]:
+    """The ``mapInArrow`` body of every fuzzy kernel: each batch passes
+    through with ``kernel(*cols)`` appended as the DoubleType columns ``out``.
+
+    With a ``threshold`` the kernel is :func:`_score_batch`, which receives it
+    for its prune, and only rows with ``score1 + score2 > threshold`` are
+    yielded — the prune and the filter it is sound under live in this one
+    pass. Without one, ``kernel`` is a one-score ``fuzzy_batch`` ratio and
+    every row is yielded."""
+    for rb in batches:
+        texts = [_texts(rb, c) for c in cols]
+        scores = [kernel(*texts)] if threshold is None else kernel(*texts, threshold)
+        rb = pa.RecordBatch.from_arrays(
+            [*rb.columns, *map(pa.array, scores)], names=[*rb.schema.names, *out]
+        )
+        yield rb if threshold is None else rb.filter(pa.array(sum(scores) > threshold))
 
 
-@F.pandas_udf(DoubleType())
-def token_set_ratio_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    return pd.Series(
-        fuzzy_batch.batch_token_set_ratio(
-            a.fillna("").astype(str).tolist(), b.fillna("").astype(str).tolist()
-        ),
-        index=a.index,
-    )
+def _map_scores(
+    df: DataFrame,
+    kernel: Callable,
+    cols: list[str],
+    out: list[str],
+    threshold: float | None = None,
+) -> DataFrame:
+    """``df`` with ``out`` appended by :func:`_score_batches`, scoring each row
+    exactly once. The pass is one opaque ``mapInArrow`` node: unlike a
+    Python UDF in a projection, no filter on its scores (an explicit one or an
+    ``isnotnull`` inferred from a join) can be pushed below it and make
+    Catalyst evaluate the kernel a second time (NOTES lesson 9)."""
+
+    def scores(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        return _score_batches(batches, kernel, cols, out, threshold)
+
+    scores.__name__ = kernel.__name__  # the plan names the node after its kernel
+    schema = StructType([*df.schema.fields, *(StructField(c, DoubleType()) for c in out)])
+    return df.mapInArrow(scores, schema)
 
 
 def fuzzy_candidate_join(
@@ -223,14 +234,14 @@ def fuzzy_candidate_join(
         )
         block_keys = [*block_keys, "_salt"]
 
-    scores_udf = make_fuzzy_scores_udf(threshold)
+    pair_cols = [query_col, query_nostop_col, name_col]
     if dedup_pairs:
         # Dedup-before-score, restated for scale:
         # 1. the pair space is DISTINCT queries × DISTINCT names per block —
         #    both tiny relative to their source tables. The query side is
         #    repartitioned round-robin BEFORE the pair join, so the exploded
         #    pairs are born spread across 2×parallelism partitions and the
-        #    scoring UDF + threshold filter run in that same stage: no
+        #    scoring pass (threshold filter included) runs in that same stage: no
         #    pair-level shuffle, no distinct over the pair set, and AQE's
         #    byte-based coalescing never sees (and can't starve) the
         #    Python-expensive stage.
@@ -252,48 +263,38 @@ def fuzzy_candidate_join(
             # cap on the name vocabulary. The caller chose this mode BECAUSE
             # the name side is too big to broadcast, so the shuffled hash join
             # is requested explicitly (size stats on a distinct agg are
-            # estimates Catalyst could get wrong). The scoring UDF inherits
+            # estimates Catalyst could get wrong). The scoring pass inherits
             # the join's block-hash distribution — AQE's skew-join split
             # handles hot blocks, and `salt` spreads a tiny block-key space.
             pairs = q_d.join(n_d.hint("shuffle_hash"), on=block_keys)
         else:
             pairs = q_d.repartition(2 * parallelism).join(F.broadcast(n_d), on=block_keys)
-        scored_pairs = (
-            pairs.withColumn(
-                "_s", scores_udf(F.col(query_col), F.col(query_nostop_col), F.col(name_col))
-            )
-            .select(
-                *block_keys,
-                query_col,
-                query_nostop_col,
-                name_col,
-                F.col("_s.score1").alias("score1"),
-                F.col("_s.score2").alias("score2"),
-            )
-            .where(F.col("score1") + F.col("score2") > F.lit(threshold))
+        scored_pairs = _map_scores(
+            pairs, _score_batch, pair_cols, ["score1", "score2"], threshold
         )
         scored = groups.join(
             scored_pairs, on=[*block_keys, query_col, query_nostop_col]
         ).join(cand, on=[*block_keys, name_col])
     else:
-        blocked = groups.join(cand, on=block_keys)
-        scored = blocked.withColumn(
-            "_s", scores_udf(F.col(query_col), F.col(query_nostop_col), F.col(name_col))
-        ).withColumn("score1", F.col("_s.score1")).withColumn("score2", F.col("_s.score2")).drop("_s")
-
-    scored = scored.where(F.col("score1") + F.col("score2") > F.lit(threshold))
+        scored = _map_scores(
+            groups.join(cand, on=block_keys),
+            _score_batch,
+            pair_cols,
+            ["score1", "score2"],
+            threshold,
+        )
     if with_state:
         # state similarity, same dedup-before-score treatment: the distinct
         # (state, stateprovince) pair set is tiny (admin vocabularies), so one
-        # small UDF pass + a broadcast join-back replaces scoring every result
+        # small scoring pass + a broadcast join-back replaces scoring every result
         # row. The pair set is built from the join INPUTS (distinct states ×
         # distinct candidate provinces), not from `scored`, so the expensive
         # subtree is never referenced twice.
         q_s = groups.select(F.col(state_query_col)).distinct()
         n_s = cand.select(F.col(state_cand_col)).distinct()
         sd = q_s.crossJoin(F.broadcast(n_s))
-        sds = sd.withColumn(
-            "score_state", partial_ratio_udf(F.col(state_query_col), F.col(state_cand_col))
+        sds = _map_scores(
+            sd, fuzzy_batch.batch_partial_ratio, [state_query_col, state_cand_col], ["score_state"]
         )
         scored = scored.join(F.broadcast(sds), on=[state_query_col, state_cand_col])
     if salt and salt > 1:
@@ -323,7 +324,7 @@ def fuzzy_mean_join(
 
     1. locality scores run over distinct (block key, query, name) with the
        query side explicitly repartitioned and the distinct name side
-       broadcast, so the UDF stage is fully parallel (AQE's byte-based
+       broadcast, so the scoring stage is fully parallel (AQE's byte-based
        coalescing never sees it) and nothing pair-product-sized shuffles;
     2. state scores run over the tiny distinct (state, province) cross;
     3. the mean + threshold apply on the distinct 4-tuple space — orders of
@@ -334,21 +335,24 @@ def fuzzy_mean_join(
     Identical results to the blocked product by construction (the score is a
     pure function of the four strings; tests/test_fuzzy_join_paths.py pins
     it, including NULL text columns): the four text columns are joined on
-    internal NULL→'' coalesced keys, matching the kernels' own fillna('') —
+    internal NULL→'' coalesced keys, matching the kernels' own NULL → '' —
     a NULL name/state is scored as '' in both paths, never silently dropped.
     ``dedup_pairs=False`` keeps the raw blocked product as the equivalence
     baseline (scores every result row; a pair-explosion at scale).
     """
     block_keys = block_keys or ["lang"]
-    udf = partial_ratio_udf if method == "partial" else token_set_ratio_udf
+    kernel = (
+        fuzzy_batch.batch_partial_ratio if method == "partial" else fuzzy_batch.batch_token_set_ratio
+    )
     if not dedup_pairs:
         blocked = groups.join(candidates, on=block_keys)
-        scored = blocked.withColumn(
-            "score",
-            (udf(F.col(query_col), F.col(name_col)) + udf(F.col(state_query_col), F.col(state_cand_col)))
-            / F.lit(2.0),
+        loc = _map_scores(blocked, kernel, [query_col, name_col], ["_sloc"])
+        scored = _map_scores(loc, kernel, [state_query_col, state_cand_col], ["_sst"])
+        return (
+            scored.withColumn("score", (F.col("_sloc") + F.col("_sst")) / F.lit(2.0))
+            .where(F.col("score") > F.lit(threshold))
+            .drop("_sloc", "_sst")
         )
-        return scored.where(F.col("score") > F.lit(threshold))
 
     parallelism = groups.sparkSession.sparkContext.defaultParallelism
 
@@ -362,20 +366,16 @@ def fuzzy_mean_join(
     # locality kernel over distinct (block, query) × distinct (block, name):
     # generate-in-place above an explicit repartition (NOTES.md lesson 1 — a
     # compute-heavy UDF over a small-byte set must not be byte-coalesced)
-    loc_scored = (
+    loc_pairs = (
         q_d.select(*block_keys, "_j2q")
         .distinct()
         .repartition(2 * parallelism)
         .join(F.broadcast(n_d.select(*block_keys, "_j2n").distinct()), on=block_keys)
-        .withColumn("_sloc", udf(F.col("_j2q"), F.col("_j2n")))
     )
+    loc_scored = _map_scores(loc_pairs, kernel, ["_j2q", "_j2n"], ["_sloc"])
     # state kernel over the tiny distinct (state, province) cross
-    st_scored = (
-        g.select("_j2s")
-        .distinct()
-        .crossJoin(F.broadcast(c.select("_j2p").distinct()))
-        .withColumn("_sst", udf(F.col("_j2s"), F.col("_j2p")))
-    )
+    st_pairs = g.select("_j2s").distinct().crossJoin(F.broadcast(c.select("_j2p").distinct()))
+    st_scored = _map_scores(st_pairs, kernel, ["_j2s", "_j2p"], ["_sst"])
     # distinct 4-tuple space: attach each name's provinces and each query's
     # states (JVM-only joins), combine the two score maps, threshold BEFORE
     # any join-back

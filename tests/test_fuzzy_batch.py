@@ -60,24 +60,68 @@ def test_score_pair_prune_sound(triples):
             assert exact == pruned
 
 
-def test_score_batch_threshold_prune_sound():
-    # batch prune: identical keep-set and identical scores for kept pairs
-    import pandas as pd
+def test_score_batches_yield_exact_survivors():
+    # the mapInArrow body, fed Arrow batches directly: it must yield exactly
+    # the rows whose EXACT scores pass s1 + s2 > 140, with those exact scores,
+    # and pass every input column through; NULL scores as ''
+    import pyarrow as pa
 
     from mass_georeferencing_spark.operators.fuzzy_join import (
         FUZZY_SUM_THRESHOLD,
         _score_batch,
+        _score_batches,
     )
 
-    qf = pd.Series(["rio grande", "lake tahoe", "zzz qqq", "black river", "x"])
-    qn = pd.Series(["rio grande", "lake tahoe", "zzz qqq", "black river", "x"])
-    nm = pd.Series(["rio grande", "tahoe city", "unrelated words", "black riv", "y"])
-    exact = _score_batch(qf, qn, nm, None)
-    pruned = _score_batch(qf, qn, nm, FUZZY_SUM_THRESHOLD)
-    for i in range(len(qf)):
-        keep_e = exact.score1[i] + exact.score2[i] > FUZZY_SUM_THRESHOLD
-        keep_p = pruned.score1[i] + pruned.score2[i] > FUZZY_SUM_THRESHOLD
-        assert keep_e == keep_p, i
-        if keep_e:
-            assert exact.score1[i] == pruned.score1[i]
-            assert exact.score2[i] == pruned.score2[i]
+    long_q = "saint " * 12 + "petersburg"  # > 63 chars: scalar fallback
+    rows = [
+        ("rio grande", "rio grande", "rio grande"),
+        ("lake tahoe", "lake tahoe", "tahoe city"),
+        ("zzz qqq", "zzz qqq", "unrelated words"),
+        ("black river", "black river", "black riv"),
+        ("x", "x", "y"),
+        (None, None, None),
+        ("", "", ""),
+        (None, "alpha", "alpha"),
+        ("são paulo", "são paulo", "sao paulo"),
+        ("köln", "köln", "köln"),
+        (long_q, long_q, long_q),
+        (long_q, long_q, "petersburg"),
+    ]
+    dropped = [("zzz qqq", "zzz qqq", "unrelated words"), ("x", "x", "y")]
+    cols = ["qf", "qn", "nm"]
+
+    def batch(rs):
+        arrays = [pa.array([r[i] for r in rs], pa.string()) for i in range(3)]
+        lang = pa.array([f"l{i}" for i in range(len(rs))], pa.string())
+        return pa.RecordBatch.from_arrays([lang, *arrays], names=["lang", *cols])
+
+    batches = [batch(rows), batch([]), batch(dropped)]
+    out = list(
+        _score_batches(
+            iter(batches), _score_batch, cols, ["score1", "score2"], FUZZY_SUM_THRESHOLD
+        )
+    )
+    assert len(out) == len(batches)
+    for rb, got in zip(batches, out):
+        texts = {c: [s or "" for s in rb.column(c).to_pylist()] for c in cols}
+        s1 = fuzzy_batch.batch_partial_ratio(texts["qf"], texts["nm"])
+        s2 = fuzzy_batch.batch_token_set_ratio(texts["qn"], texts["nm"])
+        keep = [i for i in range(rb.num_rows) if s1[i] + s2[i] > FUZZY_SUM_THRESHOLD]
+        assert got.schema.names == ["lang", *cols, "score1", "score2"]
+        assert got.to_pydict() == {
+            **rb.take(pa.array(keep, pa.int64())).to_pydict(),
+            "score1": [s1[i] for i in keep],
+            "score2": [s2[i] for i in keep],
+        }
+    assert out[0].num_rows > 5 and out[2].num_rows == 0
+
+    # without a threshold: one exact ratio per row, no row dropped
+    (one,) = _score_batches(
+        iter(batches[:1]), fuzzy_batch.batch_partial_ratio, ["qf", "nm"], ["s"]
+    )
+    assert one.num_rows == len(rows)
+    assert one.column("s").to_pylist() == list(
+        fuzzy_batch.batch_partial_ratio(
+            [r[0] or "" for r in rows], [r[2] or "" for r in rows]
+        )
+    )

@@ -5,8 +5,9 @@ grep for the plan properties the 100 TB design depends on:
   column pruning reach the source);
 - dimension joins are BroadcastHashJoin (no shuffle of the big side);
 - relational stages sit inside WholeStageCodegen spans;
-- the only Python boundaries are ArrowEvalPython / MapInPandas nodes at the
-  designed UDF points (fuzzy scoring, PIP refine, cover generators).
+- the only Python boundaries are Arrow-batched Python nodes (ArrowEvalPython,
+  MapInArrow, MapInPandas, ...) at the designed points (fuzzy scoring, PIP
+  refine, cover generators).
 
 Run: python tools/explain_audit.py [sf_dir]
 """
@@ -40,7 +41,8 @@ CHECKS = {
     "column_pruning": re.compile(r"ReadSchema: [^\n]*struct<[^>]{0,200}>"),
     "broadcast_join": re.compile(r"BroadcastHashJoin"),
     "codegen": re.compile(r"codegen id :|WholeStageCodegen"),
-    "arrow_udf": re.compile(r"ArrowEvalPython|MapInPandas|FlatMapGroupsInPandas"),
+    # every Python plan node (same pattern as tests/test_plan_shape.py)
+    "arrow_udf": re.compile(r"\b(\w*(?:EvalPython|InPandas|InArrow|PythonUDTF)\w*)\b"),
     "shuffle_join": re.compile(r"SortMergeJoin|ShuffledHashJoin"),
 }
 
@@ -124,7 +126,7 @@ def main() -> int:
     ok &= no_python
 
     # 7. fuzzy shuffle-dedup path: the pair join is a SHUFFLED join (no
-    #    broadcast-range cap on the name side), Arrow UDF still the only
+    #    broadcast-range cap on the name side), Arrow batches still the only
     #    Python boundary
     scored_sh = fuzzy_candidate_join(groups, cands, dedup_pairs="shuffle")
     ok &= audit("fuzzy_join_shuffle", scored_sh, ["shuffle_join", "arrow_udf", "codegen"])
