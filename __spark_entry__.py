@@ -26,12 +26,10 @@ from pyspark.sql import functions as F
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from mass_georeferencing_spark.functions.cells import cell_oracle_sql, latlng_to_cell_col
-from mass_georeferencing_spark.functions.geo import haversine_col
 from mass_georeferencing_spark.functions.textnorm import garbage_locality_filter, located_at
 from mass_georeferencing_spark.operators.layers import explode_alternate_names
 from mass_georeferencing_spark.operators.record_groups import build_record_groups, group_id
 from mass_georeferencing_spark.operators.scoring import (
-    distance_band_score,
     drop_empty_groups,
     elevation_band_score,
     group_candidate_counts,
@@ -218,19 +216,19 @@ def _q_f14_cell_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_j5_distance_band(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from mass_georeferencing_spark.operators.spatial import distance_band_join
+
     m = syn.mentions_df(spark, sf_dir).where(F.col("lat").isNotNull() & (F.col("lang") == "en"))
     admin = syn.gazetteer_df(spark, sf_dir).where(F.col("data_source") == "admin")
-    j = m.join(
-        F.broadcast(admin.select("lang", "uid", F.col("lon").alias("cand_lon"), F.col("lat").alias("cand_lat"))),
-        on="lang",
+    admin_sel = admin.select(
+        "lang", "uid", F.col("lon").alias("cand_lon"), F.col("lat").alias("cand_lat")
     )
-    dist = haversine_col(F.col("lon"), F.col("lat"), F.col("cand_lon"), F.col("cand_lat"))
-    return j.select(
+    return distance_band_join(m, admin_sel, on=["lang"], broadcast_right=True).select(
         "url",
         "mention",
         "uid",
-        F.round(dist, 1).alias("distance_m"),
-        distance_band_score(dist).alias("score_spatial"),
+        F.round("distance_m", 1).alias("distance_m"),
+        "score_spatial",
     )
 
 

@@ -9,8 +9,8 @@ Reference semantics (batch_georeferencing/functions.py:258-309):
 The reference achieves tractability by *blocking*: candidates are fetched per
 (species, country[, state]) before scoring (batch_georeferencing.py:129-499,
 SURVEY.md O1). Here blocking is an equi-join on the block key (lang plays
-countrycode) — Catalyst turns it into a broadcast hash join when the gazetteer
-slice is small, else a shuffled hash join; AQE splits skewed blocks.
+countrycode) between the distinct query side and the broadcast distinct name
+side — the one physical path, so a hot block key never shuffles.
 
 Scale design (100 TB):
 1. **Dedup-before-score**: groups and candidates repeat the same (query, name)
@@ -33,10 +33,6 @@ Scale design (100 TB):
    index role (SURVEY.md O4) with blocking + dedup + vectorization.
 4. **State scores deduplicated** the same way: distinct (state, province) pairs
    scored once, broadcast back.
-5. **Salting**: optional `salt` splits a hot block key into ``salt`` sub-blocks —
-   megacity/no-state skew (SURVEY.md §7.3). With the broadcast pair-generation
-   path, hot keys never shuffle at all, so this matters only for the
-   ``dedup_pairs=False`` blocked-product fallback.
 """
 
 from __future__ import annotations
@@ -202,104 +198,57 @@ def fuzzy_candidate_join(
     state_query_col: str = "state",
     state_cand_col: str = "stateprovince_folded",
     threshold: float = FUZZY_SUM_THRESHOLD,
-    with_state: bool = True,
-    dedup_pairs: bool | str = True,
-    salt: int | None = None,
 ) -> DataFrame:
     """Blocked fuzzy theta-join: groups × candidates within block, scored and
     thresholded (functions.py:258-292).
 
-    Returns groups ⋈ candidates columns + score1, score2 [, score_state].
-    ``with_state=False`` mirrors the reference's no-state branch
-    (batch_georeferencing.py:193, functions.py:268 state flag).
-
-    ``dedup_pairs``: True/'broadcast' = distinct-pair scoring with the name
-    side broadcast (the default; right when the per-block name vocabulary is
-    dimension-sized); 'shuffle' = the same distinct-pair dedup via a shuffled
-    equi-join on the block key — no size cap on either side, AQE splits skewed
-    blocks, pass ``salt`` when block cardinality is tiny; False = no pair
-    dedup at all (the raw blocked product — only for benchmarking the dedup
-    win). All three produce identical results (tests/test_fuzzy_join_paths.py).
+    Returns groups ⋈ candidates columns + score1, score2, score_state. Equal to
+    scoring the blocked groups × candidates product directly
+    (tests/test_fuzzy_join_paths.py keeps that product as its reference).
     """
     block_keys = block_keys or ["lang"]
-    cand = candidates
-    if salt and salt > 1:
-        # replicate candidates across `salt` sub-blocks; groups pick one
-        # deterministically → hot keys spread over `salt` reducers.
-        cand = cand.withColumn(
-            "_salt", F.explode(F.array([F.lit(i) for i in range(salt)]))
-        )
-        groups = groups.withColumn(
-            "_salt", F.pmod(F.xxhash64(F.col(query_col)), F.lit(salt)).cast("int")
-        )
-        block_keys = [*block_keys, "_salt"]
-
+    # Dedup-before-score, restated for scale:
+    # 1. the pair space is DISTINCT queries × DISTINCT names per block —
+    #    both tiny relative to their source tables. The query side is
+    #    repartitioned round-robin BEFORE the pair join, so the exploded
+    #    pairs are born spread across 2×parallelism partitions and the
+    #    scoring pass (threshold filter included) runs in that same stage: no
+    #    pair-level shuffle, no distinct over the pair set, and AQE's
+    #    byte-based coalescing never sees (and can't starve) the
+    #    Python-expensive stage. Hot block keys never shuffle either.
+    # 2. the threshold filter runs on scored pairs BEFORE any join-back —
+    #    the surviving set is orders of magnitude smaller.
+    # 3. the final result is groups ⋈ pairs ⋈ candidates in THAT order —
+    #    the blocked (groups × candidates) product is never materialized;
+    #    both join-backs are broadcast-able (AQE promotes from runtime
+    #    sizes) and equality on (block key, query/name) keeps exact
+    #    blocking semantics.
+    # n_d is broadcast: it is the DISTINCT name set, far smaller than the
+    # gazetteer (SCALE.md: a vocabulary past broadcast range is unmeasured).
+    q_d = groups.select(*block_keys, query_col, query_nostop_col).distinct()
+    n_d = candidates.select(*block_keys, name_col).distinct()
+    parallelism = groups.sparkSession.sparkContext.defaultParallelism
+    pairs = q_d.repartition(2 * parallelism).join(F.broadcast(n_d), on=block_keys)
     pair_cols = [query_col, query_nostop_col, name_col]
-    if dedup_pairs:
-        # Dedup-before-score, restated for scale:
-        # 1. the pair space is DISTINCT queries × DISTINCT names per block —
-        #    both tiny relative to their source tables. The query side is
-        #    repartitioned round-robin BEFORE the pair join, so the exploded
-        #    pairs are born spread across 2×parallelism partitions and the
-        #    scoring pass (threshold filter included) runs in that same stage: no
-        #    pair-level shuffle, no distinct over the pair set, and AQE's
-        #    byte-based coalescing never sees (and can't starve) the
-        #    Python-expensive stage.
-        # 2. the threshold filter runs on scored pairs BEFORE any join-back —
-        #    the surviving set is orders of magnitude smaller.
-        # 3. the final result is groups ⋈ pairs ⋈ candidates in THAT order —
-        #    the blocked (groups × candidates) product is never materialized;
-        #    both join-backs are broadcast-able (AQE promotes from runtime
-        #    sizes) and equality on (block key, query/name) keeps exact
-        #    blocking semantics.
-        # n_d is broadcast: it is the DISTINCT name set, far smaller than the
-        # gazetteer; if a deployment's per-block name vocabulary outgrows
-        # broadcast range, pass dedup_pairs=False (blocked shuffle join).
-        q_d = groups.select(*block_keys, query_col, query_nostop_col).distinct()
-        n_d = cand.select(*block_keys, name_col).distinct()
-        parallelism = groups.sparkSession.sparkContext.defaultParallelism
-        if dedup_pairs == "shuffle":
-            # both distinct sides shuffled on the block key: no broadcast-range
-            # cap on the name vocabulary. The caller chose this mode BECAUSE
-            # the name side is too big to broadcast, so the shuffled hash join
-            # is requested explicitly (size stats on a distinct agg are
-            # estimates Catalyst could get wrong). The scoring pass inherits
-            # the join's block-hash distribution — AQE's skew-join split
-            # handles hot blocks, and `salt` spreads a tiny block-key space.
-            pairs = q_d.join(n_d.hint("shuffle_hash"), on=block_keys)
-        else:
-            pairs = q_d.repartition(2 * parallelism).join(F.broadcast(n_d), on=block_keys)
-        scored_pairs = _map_scores(
-            pairs, _score_batch, pair_cols, ["score1", "score2"], threshold
-        )
-        scored = groups.join(
-            scored_pairs, on=[*block_keys, query_col, query_nostop_col]
-        ).join(cand, on=[*block_keys, name_col])
-    else:
-        scored = _map_scores(
-            groups.join(cand, on=block_keys),
-            _score_batch,
-            pair_cols,
-            ["score1", "score2"],
-            threshold,
-        )
-    if with_state:
-        # state similarity, same dedup-before-score treatment: the distinct
-        # (state, stateprovince) pair set is tiny (admin vocabularies), so one
-        # small scoring pass + a broadcast join-back replaces scoring every result
-        # row. The pair set is built from the join INPUTS (distinct states ×
-        # distinct candidate provinces), not from `scored`, so the expensive
-        # subtree is never referenced twice.
-        q_s = groups.select(F.col(state_query_col)).distinct()
-        n_s = cand.select(F.col(state_cand_col)).distinct()
-        sd = q_s.crossJoin(F.broadcast(n_s))
-        sds = _map_scores(
-            sd, fuzzy_batch.batch_partial_ratio, [state_query_col, state_cand_col], ["score_state"]
-        )
-        scored = scored.join(F.broadcast(sds), on=[state_query_col, state_cand_col])
-    if salt and salt > 1:
-        scored = scored.drop("_salt")
-    return scored
+    scored_pairs = _map_scores(pairs, _score_batch, pair_cols, ["score1", "score2"], threshold)
+    scored = groups.join(scored_pairs, on=[*block_keys, query_col, query_nostop_col]).join(
+        candidates, on=[*block_keys, name_col]
+    )
+    # state similarity, same dedup-before-score treatment: the distinct
+    # (state, stateprovince) pair set is tiny (admin vocabularies), so one
+    # small scoring pass + a broadcast join-back replaces scoring every result
+    # row. The pair set is built from the join INPUTS (distinct states ×
+    # distinct candidate provinces), not from `scored`, so the expensive
+    # subtree is never referenced twice.
+    q_s = groups.select(F.col(state_query_col)).distinct()
+    n_s = candidates.select(F.col(state_cand_col)).distinct()
+    sds = _map_scores(
+        q_s.crossJoin(F.broadcast(n_s)),
+        fuzzy_batch.batch_partial_ratio,
+        [state_query_col, state_cand_col],
+        ["score_state"],
+    )
+    return scored.join(F.broadcast(sds), on=[state_query_col, state_cand_col])
 
 
 def fuzzy_mean_join(
@@ -312,15 +261,14 @@ def fuzzy_mean_join(
     state_cand_col: str = "stateprovince_folded",
     method: str = "partial",
     threshold: float = 80.0,
-    dedup_pairs: bool = True,
 ) -> DataFrame:
     """J2 — the older engine's variant (old/shiny/match_localities/match_SI_GBIF.py:43-71):
     score = (locality_sim + state_sim) / 2, keep > threshold; method switches
     partial_ratio vs token_set_ratio (:55,64).
 
-    ``dedup_pairs=True`` (default) gives J2 the same scale treatment as J1
-    (:func:`fuzzy_candidate_join`): both similarity kernels score DISTINCT
-    string pairs, never the blocked groups × candidates product —
+    J2 gets the same scale treatment as J1 (:func:`fuzzy_candidate_join`):
+    both similarity kernels score DISTINCT string pairs, never the blocked
+    groups × candidates product —
 
     1. locality scores run over distinct (block key, query, name) with the
        query side explicitly repartitioned and the distinct name side
@@ -332,28 +280,17 @@ def fuzzy_mean_join(
        surviving tuples join back (groups ⋈ tuples ⋈ candidates, both
        join-backs AQE-decided).
 
-    Identical results to the blocked product by construction (the score is a
-    pure function of the four strings; tests/test_fuzzy_join_paths.py pins
-    it, including NULL text columns): the four text columns are joined on
-    internal NULL→'' coalesced keys, matching the kernels' own NULL → '' —
-    a NULL name/state is scored as '' in both paths, never silently dropped.
-    ``dedup_pairs=False`` keeps the raw blocked product as the equivalence
-    baseline (scores every result row; a pair-explosion at scale).
+    Identical results to scoring the blocked product by construction (the
+    score is a pure function of the four strings; tests/test_fuzzy_join_paths.py
+    pins it against that product, including NULL text columns): the four text
+    columns are joined on internal NULL→'' coalesced keys, matching the
+    kernels' own NULL → '' — a NULL name/state is scored as '', never
+    silently dropped.
     """
     block_keys = block_keys or ["lang"]
     kernel = (
         fuzzy_batch.batch_partial_ratio if method == "partial" else fuzzy_batch.batch_token_set_ratio
     )
-    if not dedup_pairs:
-        blocked = groups.join(candidates, on=block_keys)
-        loc = _map_scores(blocked, kernel, [query_col, name_col], ["_sloc"])
-        scored = _map_scores(loc, kernel, [state_query_col, state_cand_col], ["_sst"])
-        return (
-            scored.withColumn("score", (F.col("_sloc") + F.col("_sst")) / F.lit(2.0))
-            .where(F.col("score") > F.lit(threshold))
-            .drop("_sloc", "_sst")
-        )
-
     parallelism = groups.sparkSession.sparkContext.defaultParallelism
 
     def _nn(c: str) -> Column:

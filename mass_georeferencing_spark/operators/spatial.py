@@ -19,9 +19,8 @@ Two physical strategies, chosen by the caller like a join hint:
   executor; no shuffle at all on the point side.
 - ``cells``: web-scale polygon sets co-partition with points on cell id.
 
-Skew: megacity cells are split adaptively — any cover cell whose polygon count
-exceeds ``max_polys_per_cell`` is re-covered at a finer resolution, bounding the
-per-cell candidate list (SURVEY.md O9).
+Skew: a megacity cell is left to AQE's skew-join split. Salting the hot cell
+measured slower with identical output (ROADMAP C6), so there is no salt path.
 """
 
 from __future__ import annotations
@@ -62,14 +61,8 @@ def polygon_cover(
     wkb_col: str = "geom_wkb",
     id_col: str = "polygon_id",
     res: int = DEFAULT_COVER_RES,
-    adaptive_max_cells: int | None = None,
 ) -> DataFrame:
-    """Explode polygons to covering cells: (polygon_id, cell, geom_wkb).
-
-    ``adaptive_max_cells`` re-covers very large polygons at a coarser resolution
-    (fewer, bigger cells) so a continent-sized AOI doesn't fan out to millions of
-    rows — the inverse of hot-cell splitting; both bound fan-out per row.
-    """
+    """Explode polygons to covering cells: (polygon_id, cell, geom_wkb)."""
     schema = StructType(
         [
             StructField(id_col, polygons.schema[id_col].dataType),
@@ -82,13 +75,7 @@ def polygon_cover(
         for pdf in batches:
             ids, cell_ids, wkbs = [], [], []
             for pid, wkb in zip(pdf[id_col], pdf[wkb_col]):
-                rings = wkb_rings(bytes(wkb))
-                use_res = res
-                cover = C.polygon_to_cells(rings, use_res)
-                if adaptive_max_cells:
-                    while len(cover) > adaptive_max_cells and use_res > 0:
-                        use_res -= 1
-                        cover = C.polygon_to_cells(rings, use_res)
+                cover = C.polygon_to_cells(wkb_rings(bytes(wkb)), res)
                 ids.extend([pid] * len(cover))
                 cell_ids.extend(cover.tolist())
                 wkbs.extend([wkb] * len(cover))
@@ -143,56 +130,19 @@ def pip_join(
     id_col: str = "polygon_id",
     res: int = DEFAULT_COVER_RES,
     strategy: str = "cells",
-    salt_hot_cells: int | None = None,
-    hot_cell_threshold: int = 100_000,
 ) -> DataFrame:
     """J3: points ⋈ polygons on containment → point columns + polygon_id.
 
     ``strategy='broadcast'``: cover table broadcast (small polygon sets).
     ``strategy='cells'``: shuffle equi-join on cell id (web-scale polygon sets).
-
-    Skew (north rule): megacity cells concentrate points. With
-    ``salt_hot_cells=k``, cells whose point count exceeds ``hot_cell_threshold``
-    get a salt: the POINT side picks one of k deterministic sub-keys, the
-    (smaller) COVER side replicates over all k — the hot cell's pairs spread
-    over k reducers while cold cells pay nothing. AQE's skew-join split handles
-    moderate skew on its own; salting is for the 1000× tail.
     """
     pts = with_cell(points.where(F.col(lat_col).isNotNull() & F.col(lon_col).isNotNull()),
                     lat_col, lon_col, res, "_cell")
     cover = polygon_cover(polygons, wkb_col, id_col, res).withColumnRenamed("cell", "_cell")
-    join_keys = ["_cell"]
-    if salt_hot_cells and salt_hot_cells > 1 and strategy == "cells":
-        hot = (
-            pts.groupBy("_cell")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .where(F.col("_n") > hot_cell_threshold)
-            .select("_cell")
-            .withColumn("_hot", F.lit(True))
-        )
-        k = salt_hot_cells
-        pts = pts.join(F.broadcast(hot), on="_cell", how="left").withColumn(
-            "_salt",
-            F.when(
-                F.col("_hot").isNotNull(),
-                F.pmod(F.xxhash64(*[F.col(c) for c in (lat_col, lon_col)]), F.lit(k)).cast("int"),
-            ).otherwise(F.lit(0)),
-        ).drop("_hot")
-        hot_keys = hot.select("_cell")
-        cover_cold = cover.join(F.broadcast(hot_keys), on="_cell", how="left_anti").withColumn(
-            "_salt", F.lit(0)
-        )
-        cover_hot = (
-            cover.join(F.broadcast(hot_keys), on="_cell", how="left_semi")
-            .withColumn("_salt", F.explode(F.array(*[F.lit(i) for i in range(k)])))
-        )
-        cover = cover_cold.unionByName(cover_hot)
-        join_keys = ["_cell", "_salt"]
     if strategy == "broadcast":
         cover = F.broadcast(cover)
-    joined = pts.join(cover, on=join_keys)
-    out = _pip_refine(joined, wkb_col, id_col, lat_col, lon_col).drop(wkb_col)
-    return out.drop("_cell", "_salt")
+    joined = pts.join(cover, on="_cell")
+    return _pip_refine(joined, wkb_col, id_col, lat_col, lon_col).drop(wkb_col, "_cell")
 
 
 def pip_anti_join(

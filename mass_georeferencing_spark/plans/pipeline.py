@@ -62,7 +62,6 @@ def georeference_frames(
     gazetteer: DataFrame,
     elevation: DataFrame | None = None,
     range_scoring: bool = False,
-    elevation_strategy: str = "broadcast",
     stage: Stage = persist_stage,
 ) -> dict[str, DataFrame]:
     """Run the full pipeline over geoparsed ``mentions`` and the normalized
@@ -115,12 +114,10 @@ def georeference_frames(
     if elevation is not None:
         # the reference's elevation disambiguation (J6, functions.py:145-230,
         # call site commented at batch_georeferencing.py:500-513): candidate →
-        # nearest elevation sample → banded |claimed − sampled| score.
-        # ``elevation_strategy``: 'broadcast' collects + broadcasts the grid
-        # (right when the elevation side is a regional raster sample);
-        # 'rings' routes to the cell-ring-expansion kNN for web-scale grids —
-        # both are exact and produce identical results (tests/test_pipeline.py).
-        from ..operators.knn import knn_join, knn_join_broadcast
+        # nearest elevation sample → banded |claimed − sampled| score. The grid
+        # is collected and broadcast (a regional raster sample); the kNN
+        # fails loud past its max_broadcast_targets guard.
+        from ..operators.knn import knn_join_broadcast
         from ..operators.scoring import elevation_band_score
 
         elev = elevation.select(
@@ -134,15 +131,12 @@ def georeference_frames(
             .where(F.col("q_lat").isNotNull())
             .dropDuplicates(["candidate_id"])
         )
-        knn_impl = knn_join_broadcast if elevation_strategy == "broadcast" else knn_join
-        knn_kwargs = {} if elevation_strategy == "broadcast" else {"res": 3}
-        nearest = knn_impl(
+        nearest = knn_join_broadcast(
             cand_pts.withColumnRenamed("candidate_id", "query_id"),
             elev.drop("elev_m"),
             k=1,
             lat_col="q_lat",
             lon_col="q_lon",
-            **knn_kwargs,
         ).select(F.col("query_id").alias("candidate_id"), "target_id")
         nearest = nearest.join(elev.select("target_id", "elev_m"), on="target_id")
         # join-back is AQE-decided, NOT forced broadcast: `nearest` has one row

@@ -126,19 +126,3 @@ def test_prune_keeps_unscored_candidates(spark):
     kept = {r.candidate_id for r in prune_low_scores(cands, scores, min_score=80.0).collect()}
     assert kept == {"c_high", "c_unscored"}
 
-
-def test_elevation_strategy_rings_equals_broadcast(spark):
-    # 'rings' (cell-ring-expansion kNN, web-scale grid path) must reproduce the
-    # broadcast kNN's pipeline output exactly
-    def fetch(strategy):
-        kept = georeference_frames(
-            *_sources(spark),
-            elevation=syn.elevation_grid_df(spark, SF_DIR),
-            elevation_strategy=strategy,
-        )["kept"]
-        return sorted(
-            (r.recgroup_id, r.uid, r.data_source, r.score_elevation, r.mean_score)
-            for r in kept.collect()
-        )
-
-    assert fetch("broadcast") == fetch("rings")

@@ -62,14 +62,11 @@ KERNELS = {"_score_batch", "batch_partial_ratio", "batch_token_set_ratio"}
 @pytest.mark.parametrize(
     "join, kwargs",
     [
-        (fuzzy_candidate_join, {"dedup_pairs": True}),
-        (fuzzy_candidate_join, {"dedup_pairs": "shuffle"}),
-        (fuzzy_candidate_join, {"dedup_pairs": False}),
-        (fuzzy_candidate_join, {"salt": 4}),
+        (fuzzy_candidate_join, {}),
         (fuzzy_mean_join, {"method": "partial"}),
         (fuzzy_mean_join, {"method": "token_set"}),
     ],
-    ids=["dedup", "shuffle", "blocked", "salt4", "mean_partial", "mean_token_set"],
+    ids=["dedup", "mean_partial", "mean_token_set"],
 )
 def test_fuzzy_kernels_score_each_pair_once(static_plan, fuzzy_inputs, join, kwargs):
     # a filter on a Python UDF's output (the score threshold, or an isnotnull

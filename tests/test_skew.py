@@ -1,17 +1,10 @@
-"""Skew-handling invariants: salted joins produce IDENTICAL results to unsalted
-(salting is a physical rewrite, never a semantic one)."""
+"""Skew: a hot cell (megacity) must not change what the cell PIP join
+returns."""
 
 import numpy as np
-from pyspark.sql import functions as F
 
 from mass_georeferencing_spark.functions.geo import wkb_polygon
-from mass_georeferencing_spark.operators.fuzzy_join import fuzzy_candidate_join
-from mass_georeferencing_spark.operators.layers import normalize_candidates
-from mass_georeferencing_spark.operators.record_groups import build_record_groups
 from mass_georeferencing_spark.operators.spatial import pip_join
-from mass_georeferencing_spark.sources import synthetic as syn
-
-from conftest import SF_DIR
 
 
 def _rect_wkb(min_lon, min_lat, max_lon, max_lat):
@@ -27,28 +20,23 @@ def _rect_wkb(min_lon, min_lat, max_lon, max_lat):
     return wkb_polygon([ring])
 
 
-def test_salted_fuzzy_join_same_results(spark):
-    groups = build_record_groups(syn.mentions_df(spark, SF_DIR))
-    cands = normalize_candidates(syn.gazetteer_df(spark, SF_DIR))
-    plain = fuzzy_candidate_join(groups, cands, with_state=False)
-    salted = fuzzy_candidate_join(groups, cands, with_state=False, salt=4)
-    key = lambda r: (r.recgroup_id, r.uid, r.data_source, r.score1, r.score2)
-    assert sorted(map(key, plain.collect())) == sorted(map(key, salted.collect()))
-
-
-def test_salted_pip_join_same_results(spark):
+def test_hot_cell_pip_join_matches_rect_truth(spark):
     # megacity skew: 500 points piled into one cell + scattered points
     rows = [(i, 10.1 + (i % 7) * 1e-4, 20.1 + (i % 5) * 1e-4) for i in range(500)]
     rows += [(1000 + i, float((i * 37) % 170 - 85) + 0.5, float((i * 53) % 360 - 180) + 0.5) for i in range(100)]
     pts = spark.createDataFrame(rows, ["pid", "lat", "lon"])
+    rects = {"p0": (0, 0, 60, 45), "p1": (-120, -60, -20, 10)}
     polys = spark.createDataFrame(
-        [("p0", bytearray(_rect_wkb(0, 0, 60, 45))), ("p1", bytearray(_rect_wkb(-120, -60, -20, 10)))],
+        [(pid, bytearray(_rect_wkb(*r))) for pid, r in rects.items()],
         ["polygon_id", "geom_wkb"],
     )
-    plain = pip_join(pts, polys, strategy="cells", res=4)
-    salted = pip_join(
-        pts, polys, strategy="cells", res=4, salt_hot_cells=4, hot_cell_threshold=50
-    )
-    key = lambda r: (r.pid, r.polygon_id)
-    assert sorted(map(key, plain.collect())) == sorted(map(key, salted.collect()))
-    assert plain.count() >= 500  # the hot cell really is inside p0
+    truth = {
+        (pid, poly)
+        for pid, lat, lon in rows
+        for poly, (x0, y0, x1, y1) in rects.items()
+        if x0 < lon < x1 and y0 < lat < y1
+    }
+    got = [(r.pid, r.polygon_id) for r in pip_join(pts, polys, strategy="cells", res=4).collect()]
+    assert sorted(got) == sorted(truth)
+    # the hot cell really is inside p0
+    assert {(i, "p0") for i in range(500)} <= set(got)

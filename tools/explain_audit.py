@@ -43,7 +43,6 @@ CHECKS = {
     "codegen": re.compile(r"codegen id :|WholeStageCodegen"),
     # every Python plan node (same pattern as tests/test_plan_shape.py)
     "arrow_udf": re.compile(r"\b(\w*(?:EvalPython|InPandas|InArrow|PythonUDTF)\w*)\b"),
-    "shuffle_join": re.compile(r"SortMergeJoin|ShuffledHashJoin"),
 }
 
 
@@ -80,15 +79,9 @@ def main() -> int:
     j = nation.join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
     ok &= audit("dim_join", j, ["broadcast_join", "codegen"])
 
-    # 3. the default fuzzy join (broadcast pair generator, Arrow UDFs the only
+    # 3. the fuzzy join (broadcast pair generator, Arrow UDFs the only
     #    Python boundary) and 9. the e2e candidate_id join-backs (never forced
     #    broadcast) are tier-1 tests: tests/test_plan_shape.py
-    from mass_georeferencing_spark.operators.fuzzy_join import fuzzy_candidate_join
-    from mass_georeferencing_spark.operators.layers import normalize_candidates
-    from mass_georeferencing_spark.operators.record_groups import build_record_groups
-
-    groups = build_record_groups(syn.mentions_df(spark, sf))
-    cands = normalize_candidates(syn.gazetteer_df(spark, sf))
 
     # 4. cell equi-join PIP: generator + hash join on cell
     from mass_georeferencing_spark.operators.spatial import pip_join
@@ -124,12 +117,6 @@ def main() -> int:
     no_python = not CHECKS["arrow_udf"].search(plan)
     print(f"  jvm_only: {'OK' if no_python else 'MISSING'}")
     ok &= no_python
-
-    # 7. fuzzy shuffle-dedup path: the pair join is a SHUFFLED join (no
-    #    broadcast-range cap on the name side), Arrow batches still the only
-    #    Python boundary
-    scored_sh = fuzzy_candidate_join(groups, cands, dedup_pairs="shuffle")
-    ok &= audit("fuzzy_join_shuffle", scored_sh, ["shuffle_join", "arrow_udf", "codegen"])
 
     # 8. J12 kNN fallback: PIP refine + broadcast-kNN matrix are the designed
     #    Arrow points; everything else JVM
@@ -172,7 +159,11 @@ def main() -> int:
     #     boundaries at the two designed points), score maps broadcast back,
     #     relational glue codegen'd
     from mass_georeferencing_spark.operators.fuzzy_join import fuzzy_mean_join
+    from mass_georeferencing_spark.operators.layers import normalize_candidates
+    from mass_georeferencing_spark.operators.record_groups import build_record_groups
 
+    groups = build_record_groups(syn.mentions_df(spark, sf))
+    cands = normalize_candidates(syn.gazetteer_df(spark, sf))
     j2 = fuzzy_mean_join(groups, cands)
     ok &= audit("fuzzy_mean_dedup", j2, ["broadcast_join", "arrow_udf", "codegen"])
 

@@ -90,8 +90,10 @@ def main() -> None:
     only = "georeference_e2e"
     repeats = int(os.environ.get("SPARK_GRAFT_SCALE_REPEATS", "1"))
     bench_repeats = int(os.environ.get("SPARK_GRAFT_SCALE_BENCH_REPEATS", "3"))
+    # the default levels fit a 4-core host without oversubscribing it; its one
+    # N->4N pairing is 1->4 (set the levels for a bigger host)
     levels = tuple(
-        int(x) for x in os.environ.get("SPARK_GRAFT_SCALE_LEVELS", "2,4,8,16,32").split(",")
+        int(x) for x in os.environ.get("SPARK_GRAFT_SCALE_LEVELS", "1,2,4").split(",")
     )
 
     t0 = time.time()
@@ -107,7 +109,7 @@ def main() -> None:
     # the executor-scaling proxies; 8->32 shares one socket's DRAM bandwidth
     # across all 32 workers (a real 4N cluster brings 4x bandwidth) and is
     # published as the documented artifact it is, not as the gate number.
-    gate_pairing = next((p for p in ("4->16", "2->8") if p in effs), None)
+    gate_pairing = next((p for p in ("4->16", "2->8", "1->4") if p in effs), None)
 
     def samples_of(r: dict) -> list[float]:
         return r.get("query_samples", {}).get("georeference_e2e", [r["queries"]["georeference_e2e"]])
