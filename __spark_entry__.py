@@ -37,7 +37,7 @@ from mass_georeferencing_spark.operators.scoring import (
     melt_scores,
     prune_low_scores,
 )
-from mass_georeferencing_spark.operators.topk import knn_top1, topk_per_group
+from mass_georeferencing_spark.operators.topk import topk_per_group
 from mass_georeferencing_spark.sources import synthetic as syn
 from mass_georeferencing_spark.sources.tables import load_table
 
@@ -223,7 +223,7 @@ def _q_j5_distance_band(spark: SparkSession, sf_dir: str) -> DataFrame:
     admin_sel = admin.select(
         "lang", "uid", F.col("lon").alias("cand_lon"), F.col("lat").alias("cand_lat")
     )
-    return distance_band_join(m, admin_sel, on=["lang"], broadcast_right=True).select(
+    return distance_band_join(m, admin_sel, on=["lang"]).select(
         "url",
         "mention",
         "uid",

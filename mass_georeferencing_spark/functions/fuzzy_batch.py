@@ -43,14 +43,14 @@ def _popcount64(v: np.ndarray) -> np.ndarray:
 
 
 def _char_matrix(strings: list[str], max_len: int) -> np.ndarray:
-    """(n, max_len) uint32 char-code matrix, 0-padded — one numpy view, no
-    per-char Python. Strings containing NUL (indistinguishable from padding)
-    are sanitized first."""
-    if any("\x00" in s for s in strings):
-        strings = [s.replace("\x00", "\x01") for s in strings]
-    arr = np.array(strings, dtype=f"U{max(max_len, 1)}")
-    n = len(strings)
-    return arr.view(np.uint32).reshape(n, max(max_len, 1))
+    """(n, max_len) uint32 matrix of char code + 1, 0-padded — one numpy view,
+    no per-char Python. The +1 keeps NUL (code 0, which numpy also pads
+    with) a character of its own, distinct from padding and from every other
+    character."""
+    w = max(max_len, 1)
+    m = np.array(strings, dtype=f"U{w}").view(np.uint32).reshape(len(strings), w)
+    lens = np.fromiter(map(len, strings), dtype=np.int64, count=len(strings))
+    return np.where(np.arange(w)[None, :] < lens[:, None], m + np.uint32(1), np.uint32(0))
 
 
 def _encode(strings: list[str], max_len: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:

@@ -43,7 +43,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, DoubleType, LongType, StructField, StructType
+from pyspark.sql.types import LongType, StructField, StructType
+
+from .fuzzy_join import _map_scores
 
 MERSENNE_P = (1 << 61) - 1
 N_PERMS = 64
@@ -84,13 +86,6 @@ def char_shingles(text: str, k: int = 5) -> set[bytes]:
     return {b[i : i + k] for i in range(len(b) - k + 1)}
 
 
-def word_shingles(text: str, k: int = 3) -> set[bytes]:
-    words = text.split()
-    if len(words) <= k:
-        return {" ".join(words).encode()} if words else set()
-    return {" ".join(words[i : i + k]).encode() for i in range(len(words) - k + 1)}
-
-
 def _shingle_hashes(sh: set[bytes]) -> np.ndarray:
     """Deterministic 32-bit hashes (crc32) of a shingle set."""
     return np.fromiter((zlib.crc32(s) for s in sh), dtype=np.int64, count=len(sh))
@@ -102,11 +97,11 @@ def _signature_from_shingles(sh: set[bytes]) -> np.ndarray:
     return m.min(axis=0).astype(np.int64)
 
 
-def minhash_signature(text: str, k: int = 5, kind: str = "char") -> np.ndarray:
+def minhash_signature(text: str, k: int = 5) -> np.ndarray:
     """(N_PERMS,) int64 minhash signature via universal hashing
-    h_i(x) = (a_i*x + b_i) mod p over crc32 shingle hashes — one vectorized
-    (shingles × perms) uint64 matrix, min-reduced per permutation."""
-    sh = char_shingles(text, k) if kind == "char" else word_shingles(text, k)
+    h_i(x) = (a_i*x + b_i) mod p over crc32 char-shingle hashes — one
+    vectorized (shingles × perms) uint64 matrix, min-reduced per permutation."""
+    sh = char_shingles(text, k)
     if not sh:
         return np.zeros(N_PERMS, dtype=np.int64)
     return _signature_from_shingles(sh)
@@ -204,7 +199,6 @@ def minhash_bands(
     text_col: str = "text",
     id_col: str = "doc_id",
     k: int = 5,
-    kind: str = "char",
     n_bands: int = N_BANDS,
 ) -> DataFrame:
     """docs → (doc_id, band, band_hash): b rows per doc (LSH bucket keys)."""
@@ -221,7 +215,7 @@ def minhash_bands(
         for pdf in batches:
             ids, bands, hashes = [], [], []
             for did, text in zip(pdf[id_col], pdf[text_col]):
-                sh = (char_shingles if kind == "char" else word_shingles)(text or "", k)
+                sh = char_shingles(text or "", k)
                 if not sh:
                     # shingle-less doc: every such doc is byte-identical to
                     # every other → exact_dedup territory; emitting the
@@ -280,25 +274,24 @@ def ngram_jaccard_verify(
     text_col: str = "text",
     id_col: str = "doc_id",
     k: int = 5,
-    kind: str = "char",
 ) -> DataFrame:
-    """Exact n-gram Jaccard on candidate pairs; keeps pairs ≥ threshold.
-    Joins each side's text (hash joins), computes in one Arrow pass."""
+    """Exact char-shingle Jaccard on candidate pairs; keeps pairs ≥ threshold.
+    Joins each side's text (hash joins) and scores each pair once in one
+    ``mapInArrow`` pass (``fuzzy_join._map_scores``): the ``>=`` filter stays
+    above that opaque node, so Catalyst cannot push it below a projection and
+    run the kernel twice (NOTES lesson 9)."""
     t_a = docs.select(F.col(id_col).alias("id_a"), F.col(text_col).alias("_ta"))
     t_b = docs.select(F.col(id_col).alias("id_b"), F.col(text_col).alias("_tb"))
     joined = pairs.join(t_a, "id_a").join(t_b, "id_b")
 
-    @F.pandas_udf(DoubleType())
-    def jacc(ta: pd.Series, tb: pd.Series) -> pd.Series:
-        mk = char_shingles if kind == "char" else word_shingles
-        return pd.Series(
-            [jaccard(mk(x or "", k), mk(y or "", k)) for x, y in zip(ta, tb)],
-            index=ta.index,
-            dtype="float64",
+    def jacc(ta: list[str], tb: list[str]) -> np.ndarray:
+        return np.array(
+            [jaccard(char_shingles(x, k), char_shingles(y, k)) for x, y in zip(ta, tb)],
+            dtype=np.float64,
         )
 
     return (
-        joined.withColumn("jaccard", jacc(F.col("_ta"), F.col("_tb")))
+        _map_scores(joined, jacc, ["_ta", "_tb"], ["jaccard"])
         .where(F.col("jaccard") >= threshold)
         .drop("_ta", "_tb")
     )
@@ -569,43 +562,21 @@ def embedding_lsh_near_dup(
     )
 
 
-MAX_UNBLOCKED_VECTORS = 50_000  # ~1.25e9 candidate pairs: the all-pairs ceiling
-
-
 def embedding_near_dup_pairs(
     embeddings: DataFrame,
     threshold: float = 0.95,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    block_col: str | None = "label",
-    max_unblocked: int = MAX_UNBLOCKED_VECTORS,
+    block_col: str = "label",
 ) -> DataFrame:
     """Near-dup vector pairs with cosine ≥ threshold, blocked by ``block_col``
     (cluster/label/LSH bucket) so the pair space stays per-block quadratic, not
-    global. All arithmetic JVM-side.
-
-    ``block_col=None`` is the all-pairs equivalence baseline — an unguarded
-    crossJoin would be a pair explosion at scale, so the input is probed with
-    a bounded ``limit(cap+1).count()`` (never materializing more than the cap)
-    and an oversized unblocked call raises, naming the scale path
-    (:func:`embedding_lsh_near_dup`) — the same fail-loud seam treatment as
-    ``knn_join_broadcast`` and ``build_lang_profiles``."""
-    if block_col is None:
-        probed = embeddings.limit(max_unblocked + 1).count()
-        if probed > max_unblocked:
-            raise ValueError(
-                f"embedding_near_dup_pairs(block_col=None): input exceeds "
-                f"max_unblocked={max_unblocked} vectors — the all-pairs "
-                f"crossJoin would generate >{max_unblocked * max_unblocked // 2:,} "
-                f"candidate pairs; use embedding_lsh_near_dup (banded "
-                f"hyperplane LSH, the scale path) or pass a block_col"
-            )
+    global. All arithmetic JVM-side. Unblocked corpora go through
+    :func:`embedding_lsh_near_dup` (banded hyperplane LSH, the scale path)."""
     e = embeddings.withColumn("_v", F.transform(F.col(vec_col), lambda x: x.cast("double")))
-    on = [block_col] if block_col else []
-    a = e.select(*on, F.col(id_col).alias("id_a"), F.col("_v").alias("_va"))
-    b = e.select(*on, F.col(id_col).alias("id_b"), F.col("_v").alias("_vb"))
-    pairs = a.join(b, on=on) if on else a.crossJoin(b)
-    pairs = pairs.where(F.col("id_a") < F.col("id_b"))
+    a = e.select(block_col, F.col(id_col).alias("id_a"), F.col("_v").alias("_va"))
+    b = e.select(block_col, F.col(id_col).alias("id_b"), F.col("_v").alias("_vb"))
+    pairs = a.join(b, on=[block_col]).where(F.col("id_a") < F.col("id_b"))
     return (
         pairs.withColumn("cosine", cosine_col(F.col("_va"), F.col("_vb")))
         .where(F.col("cosine") >= threshold)

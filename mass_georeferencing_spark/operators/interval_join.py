@@ -6,14 +6,10 @@ them (start_date/end_date selected yet unused, batch_georeferencing/queries.py:
 resurrects the operator for the pages table: ``warc_ts`` × gazetteer-entity
 validity (SURVEY.md §2.3 "absent" row → implemented).
 
-Two physical strategies:
-- ``broadcast``: dims broadcast, non-equi predicate evaluated in a
-  BroadcastNestedLoopJoin — right answer when dims are small (historical
-  county tables are thousands of rows).
-- ``buckets``: both sides keyed to coarse time buckets (dim windows explode to
-  every bucket they overlap — bounded fan-out = window_span/bucket), hash
-  equi-join on bucket, exact range refine. This is the web-scale path: shuffle
-  is keyed, no nested loop, skew handled by AQE like any equi-join.
+Physical plan: both sides keyed to coarse time buckets (dim windows explode to
+every bucket they overlap — bounded fan-out = window_span/bucket), hash
+equi-join on bucket, exact range refine. The shuffle is keyed, there is no
+nested loop, and skew is handled by AQE like any equi-join.
 """
 
 from __future__ import annotations
@@ -34,7 +30,6 @@ def interval_join(
     ts_col: str = "warc_ts",
     start_col: str = "valid_from",
     end_col: str = "valid_to",
-    strategy: str = "buckets",
     bucket_seconds: int = SECONDS_PER_BUCKET,
 ) -> DataFrame:
     """facts ⋈ dims where start ≤ ts < end (half-open, the temporal-table
@@ -42,10 +37,6 @@ def interval_join(
     ts = F.unix_timestamp(F.col(ts_col))
     lo = F.unix_timestamp(F.col(start_col))
     hi = F.unix_timestamp(F.col(end_col))
-    if strategy == "broadcast":
-        cond = (F.col(ts_col) >= F.col(start_col)) & (F.col(ts_col) < F.col(end_col))
-        return facts.join(F.broadcast(dims), on=cond)
-
     f = facts.withColumn("_bucket", _bucket(ts, bucket_seconds))
     d = dims.withColumn(
         "_bucket",
@@ -69,7 +60,6 @@ def as_of_join(
     on: list[str],
     ts_col: str = "warc_ts",
     version_ts_col: str = "version_ts",
-    strategy: str = "buckets",
 ) -> DataFrame:
     """As-of join: for each fact, the LATEST dim version with
     version_ts ≤ fact ts, per ``on`` key — the classic temporal-lookup

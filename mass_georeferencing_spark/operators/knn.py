@@ -39,6 +39,9 @@ from pyspark.sql import functions as F
 from ..functions import cells as C
 from ..functions.geo import haversine_col
 
+INITIAL_RING = 1  # round 0 probes the whole disk of this ring radius
+MAX_ROUNDS = 12  # ring-expansion rounds before an unsettled query raises
+
 
 def knn_join(
     queries: DataFrame,
@@ -51,19 +54,19 @@ def knn_join(
     target_id_col: str = "target_id",
     target_lat: str = "target_lat",
     target_lon: str = "target_lon",
-    max_rounds: int = 12,
-    initial_k: int = 1,
 ) -> DataFrame:
     """Exact k-nearest ``targets`` per query point via ring expansion.
 
     Output: query columns + target_id, target_lat, target_lon, distance_m, knn_rank.
     ``targets`` must have globally unique ``target_id``.
 
-    ``initial_k``: the first round probes the whole k-ring disk of this radius
+    The first round probes the whole disk of radius ``INITIAL_RING``
     (neighbors included immediately), so typical points settle on round 2 —
     driver-side rounds carry fixed scheduling cost, so fewer, fatter rounds win.
     Pick ``res`` so cells hold ~10²-10³ targets; a too-fine grid multiplies
     rounds, a too-coarse one multiplies exact-distance evaluations (JVM, cheap).
+    A query still unsettled after ``MAX_ROUNDS`` rounds (its k-th target lies
+    beyond the last ring) raises instead of returning an unproven top-k.
     """
     spread = 2 * queries.sparkSession.sparkContext.defaultParallelism
     t = (
@@ -76,8 +79,8 @@ def knn_join(
     best: DataFrame | None = None
     unsettled = queries.select(id_col, lat_col, lon_col)
 
-    r = initial_k
-    for round_no in range(max_rounds):
+    r = INITIAL_RING
+    for round_no in range(MAX_ROUNDS):
         cells = C.ring_cells_col(
             F.col(lat_col), F.col(lon_col), res, r, full_disk=(round_no == 0)
         )
@@ -113,6 +116,12 @@ def knn_join(
         if unsettled.isEmpty():
             break
         r += 1
+    else:
+        raise RuntimeError(
+            f"knn_join: {unsettled.count()} queries unsettled after MAX_ROUNDS="
+            f"{MAX_ROUNDS} rounds (ring radius {r - 1} at res {res}): their k={k} "
+            f"nearest targets are not proven; use a coarser res for sparse targets"
+        )
 
     return best.join(queries, on=[id_col, lat_col, lon_col])
 
@@ -228,6 +237,8 @@ def knn_join_broadcast(
 
 
 M_PER_DEG = math.pi * 6371008.8 / 180.0  # meridian meters per degree
+POLAR_LAT = 80.0  # queries above this |lat| take the polar-cap brute pass
+SLICE_MARGIN_DEG = 5.0  # the brute pass's target slice reaches this far below it
 
 
 def knn_join_polar_safe(
@@ -241,18 +252,15 @@ def knn_join_polar_safe(
     target_id_col: str = "target_id",
     target_lat: str = "target_lat",
     target_lon: str = "target_lon",
-    polar_lat: float = 80.0,
-    slice_margin_deg: float = 5.0,
-    **knn_kwargs,
 ) -> DataFrame:
-    """Exact kNN = ring expansion below ``polar_lat`` + a polar-cap brute pass
+    """Exact kNN = ring expansion below ``POLAR_LAT`` + a polar-cap brute pass
     above it.
 
     Equirectangular cells shrink east-west toward the poles, so
     :func:`ring_guarantee_m`'s width bound collapses there and ring expansion
     needs many rounds to settle (NOTES.md round-1 item; the bound stays CORRECT,
-    just loose). Queries at |lat| > polar_lat instead brute-match against the
-    broadcast polar slice of targets (|lat| ≥ polar_lat − slice_margin_deg,
+    just loose). Queries at |lat| > POLAR_LAT instead brute-match against the
+    broadcast polar slice of targets (|lat| ≥ POLAR_LAT − SLICE_MARGIN_DEG,
     per hemisphere — a tiny fraction of any real gazetteer). A result is
     provably exact when the k-th distance ≤ the meridional distance from the
     query to the slice boundary (every target outside the slice is at least
@@ -260,14 +268,14 @@ def knn_join_polar_safe(
     expansion, so the whole operator stays exact for every input.
     """
     apolar = F.abs(F.col(lat_col))
-    polar_q = queries.where(apolar > F.lit(polar_lat))
-    rest_q = queries.where(apolar <= F.lit(polar_lat))
+    polar_q = queries.where(apolar > F.lit(POLAR_LAT))
+    rest_q = queries.where(apolar <= F.lit(POLAR_LAT))
     out = knn_join(
         rest_q, targets, k=k, res=res, id_col=id_col, lat_col=lat_col,
         lon_col=lon_col, target_id_col=target_id_col, target_lat=target_lat,
-        target_lon=target_lon, **knn_kwargs,
+        target_lon=target_lon,
     )
-    slice_lat = polar_lat - slice_margin_deg
+    slice_lat = POLAR_LAT - SLICE_MARGIN_DEG
     parts = []
     for sign in (1, -1):
         hemi_q = polar_q.where(F.col(lat_col) * sign > 0)
@@ -300,7 +308,7 @@ def knn_join_polar_safe(
                 knn_join(
                     unproved, targets, k=k, res=res, id_col=id_col, lat_col=lat_col,
                     lon_col=lon_col, target_id_col=target_id_col,
-                    target_lat=target_lat, target_lon=target_lon, **knn_kwargs,
+                    target_lat=target_lat, target_lon=target_lon,
                 )
             )
     for p in parts:

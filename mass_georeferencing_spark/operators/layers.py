@@ -8,8 +8,7 @@ Reference: every layer query projects to ``(uid, name, stateprovince, data_sourc
 
 Scale notes: layers are dimension tables (10^5–10^9 rows, BASELINE.md) — the
 normalization is narrow projections + generators (explode), no shuffles except the
-final ``dropDuplicates`` which the engine makes optional (exact-dedup A4) because
-the fuzzy join's dedup-before-score already collapses repeated names.
+exact-dedup (A4) ``dropDuplicates``.
 """
 
 from __future__ import annotations
@@ -40,22 +39,6 @@ def explode_alternate_names(
     return base.unionByName(alts).where(F.col(name_col) != "")
 
 
-def county_alias_names(
-    layer: DataFrame,
-    name_col: str = "name",
-    admin1_col: str = "stateprovince",
-) -> DataFrame:
-    """F5/U1: GADM-style alias expansion — emit the bare name plus
-    '<name> Co., <admin1>' and '<name>, <admin1>' forms (queries.py:108-130)."""
-    alias1 = layer.withColumn(
-        name_col, F.concat(F.col(name_col), F.lit(" Co., "), F.col(admin1_col))
-    )
-    alias2 = layer.withColumn(
-        name_col, F.concat(F.col(name_col), F.lit(", "), F.col(admin1_col))
-    )
-    return layer.unionByName(alias1).unionByName(alias2)
-
-
 def gadm_alias_names(
     gadm: DataFrame,
     state_abbrevs: DataFrame,
@@ -75,8 +58,7 @@ def gadm_alias_names(
 
     The reference UNIONs (distinct); mirrored with a final dropDuplicates on
     the candidate key. All branches are narrow projections + one broadcast
-    join — zero shuffles before the dedup, which a caller can drop when the
-    downstream fuzzy join dedups names anyway (see county_alias_names note).
+    join — zero shuffles before the dedup.
     """
 
     def sp(level: int):
@@ -151,22 +133,15 @@ def gadm_alias_names(
     )
 
 
-def normalize_candidates(
-    layer: DataFrame,
-    dedup: bool = True,
-    fold: bool = True,
-) -> DataFrame:
-    """P1 + A4 + F2: project to the candidate schema, ASCII-fold the fuzzy-join
-    inputs (functions.py:264-265), optionally exact-dedup (queries.py:57 GROUP BY)."""
-    cols = [c for c in layer.columns]
-    out = layer
-    if fold:
-        out = out.withColumn("name_folded", ascii_fold_udf(F.col("name"))).withColumn(
-            "stateprovince_folded", ascii_fold_udf(F.col("stateprovince"))
-        )
-    if dedup:
-        out = out.dropDuplicates([c for c in ("uid", "name", "stateprovince", "data_source") if c in cols])
-    return out
+def normalize_candidates(layer: DataFrame) -> DataFrame:
+    """P1 + A4 + F2: ASCII-fold the fuzzy-join inputs (functions.py:264-265)
+    and exact-dedup on the candidate key columns present (queries.py:57
+    GROUP BY)."""
+    return (
+        layer.withColumn("name_folded", ascii_fold_udf(F.col("name")))
+        .withColumn("stateprovince_folded", ascii_fold_udf(F.col("stateprovince")))
+        .dropDuplicates([c for c in CANDIDATE_COLS if c in layer.columns])
+    )
 
 
 def union_layers(*layers: DataFrame, dedup: bool = False) -> DataFrame:

@@ -9,7 +9,7 @@ spatial kNN J6, batch_georeferencing/functions.py:170). Two strategies:
   embarrassingly parallel; the right answer at any scale where queries are few.
 - **IVF (inverted-file) top-k** (the scale path): k-means-style coarse centroids
   (deterministic subset seed), every corpus vector assigned to its nearest
-  centroid (one broadcast join + top-1 window), queries probe only their
+  centroid (one map-side numpy argmax pass), queries probe only their
   ``nprobe`` nearest centroid partitions. Cuts scanned fraction to
   nprobe/n_centroids; recall verified against brute force in tests.
 """
@@ -20,8 +20,11 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.types import StructField, StructType
 
 from .dedup import cosine_col
 
@@ -37,20 +40,17 @@ def brute_force_topk(
     query_id: str = "query_id",
     corpus_id: str = "vec_id",
     vec_col: str = "embedding",
-    partial: bool = True,
 ) -> DataFrame:
     """Exact cosine top-k per query. Output: (query_id, vec_id, cosine, rank).
 
-    ``partial=True`` (default) inserts a map-side partial top-k: each corpus
+    A map-side partial top-k runs ahead of the per-query window: each corpus
     partition keeps only its own best k rows per query (a running
-    nq×k-bounded accumulator over Arrow batches) BEFORE the per-query window,
-    so the shuffle into the single-reducer-per-query ranking carries
-    ≤ partitions × queries × k rows instead of the whole corpus — the same
-    trick as map-side combine for aggregation. The partial selection uses the
-    IDENTICAL total order as the window (round(cosine, 9) desc, id asc,
-    rounded JVM-side so no Python float rounding can disagree), so results
-    are exactly the window-only results. ``partial=False`` keeps the plain
-    window (the minimal-plan baseline)."""
+    nq×k-bounded accumulator over Arrow batches), so the shuffle into the
+    single-reducer-per-query ranking carries ≤ partitions × queries × k rows
+    instead of the whole corpus — the same trick as map-side combine for
+    aggregation. The partial selection uses the IDENTICAL total order as the
+    window (round(cosine, 9) desc, id asc, rounded JVM-side so no Python float
+    rounding can disagree), so results are exactly the window-only results."""
     q = _as_double(queries, vec_col, "_qv").select(query_id, "_qv")
     c = _as_double(corpus, vec_col, "_cv").select(corpus_id, "_cv")
     joined = c.crossJoin(F.broadcast(q))
@@ -58,32 +58,31 @@ def brute_force_topk(
     scored = scored.withColumn("_cos_r", F.round(F.col("cosine"), 9)).select(
         query_id, corpus_id, "cosine", "_cos_r"
     )
-    if partial:
-        out_schema = scored.schema
+    out_schema = scored.schema
 
-        def part_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            acc: pd.DataFrame | None = None
-            for pdf in batches:
-                cur = pdf if acc is None else pd.concat([acc, pdf], ignore_index=True)
-                acc = (
-                    cur.sort_values(
-                        [query_id, "_cos_r", corpus_id],
-                        ascending=[True, False, True],
-                        na_position="last",
-                    )
-                    .groupby(query_id, sort=False)
-                    .head(k)
+    def part_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        acc: pd.DataFrame | None = None
+        for pdf in batches:
+            cur = pdf if acc is None else pd.concat([acc, pdf], ignore_index=True)
+            acc = (
+                cur.sort_values(
+                    [query_id, "_cos_r", corpus_id],
+                    ascending=[True, False, True],
+                    na_position="last",
                 )
-            yield acc if acc is not None else pd.DataFrame(
-                {f.name: pd.Series(dtype=object) for f in out_schema.fields}
+                .groupby(query_id, sort=False)
+                .head(k)
             )
+        yield acc if acc is not None else pd.DataFrame(
+            {f.name: pd.Series(dtype=object) for f in out_schema.fields}
+        )
 
-        scored = scored.mapInPandas(part_topk, out_schema)
     w = Window.partitionBy(query_id).orderBy(
         F.col("_cos_r").desc(), F.col(corpus_id).asc()
     )
     return (
-        scored.withColumn("rank", F.row_number().over(w))
+        scored.mapInPandas(part_topk, out_schema)
+        .withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
         .select(query_id, corpus_id, F.round(F.col("cosine"), 6).alias("cosine"), "rank")
     )
@@ -95,40 +94,23 @@ def assign_centroids(
     corpus_id: str = "vec_id",
     centroid_id: str = "centroid_id",
     vec_col: str = "embedding",
-    strategy: str = "mapside",
 ) -> DataFrame:
     """IVF build: nearest centroid per corpus vector. Output: corpus columns +
     centroid_id.
 
-    ``strategy='mapside'`` (default): the centroid matrix is collected (it is
-    the small side by construction — n_centroids × dim), sc.broadcast to the
-    executors, and each Arrow batch computes one numpy matmul + argmax —
-    ZERO shuffle, no crossJoin row blow-up. At 10^12 vectors the old
-    window route shuffled n_centroids copies of the corpus per Lloyd round;
-    this one streams the corpus once per round.
+    The centroid matrix is collected (it is the small side by construction —
+    n_centroids × dim), sc.broadcast to the executors, and each Arrow batch
+    computes one numpy matmul + argmax — ZERO shuffle, no crossJoin row
+    blow-up, so each Lloyd round streams the corpus once. The pass is one
+    opaque ``mapInArrow`` node, so no filter on ``centroid_id`` (an
+    ``isnotnull`` inferred from a join on it) can be pushed below it and
+    make Catalyst run the assignment twice (NOTES lesson 9).
 
-    ``strategy='window'``: the original broadcast-crossJoin + per-vector top-1
-    window (kept as the all-DataFrame equivalence baseline; same results).
-
-    Tie rule (both paths): round(cosine, 9) descending, centroid_id
-    ascending. The mapside path reproduces it with numpy rounding; an exact
-    half at the 9th decimal could theoretically round differently
-    (HALF_UP vs banker's) but cannot arise from float cosines in practice."""
-    if strategy == "window":
-        c = _as_double(corpus, vec_col, "_cv")
-        cent = _as_double(centroids, vec_col, "_zv").select(centroid_id, "_zv")
-        joined = c.crossJoin(F.broadcast(cent)).withColumn(
-            "_sim", cosine_col(F.col("_cv"), F.col("_zv"))
-        )
-        w = Window.partitionBy(corpus_id).orderBy(
-            F.round(F.col("_sim"), 9).desc(), F.col(centroid_id).asc()
-        )
-        return (
-            joined.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .drop("_rn", "_sim", "_zv", "_cv")
-        )
-
+    Tie rule: round(cosine, 9) descending, centroid_id ascending, the order
+    of a crossJoin + per-vector top-1 window (tests/test_similarity.py keeps
+    that window as its reference). numpy rounding reproduces it; an exact
+    half at the 9th decimal could theoretically round differently (HALF_UP
+    vs banker's) but cannot arise from float cosines in practice."""
     cent_rows = centroids.select(centroid_id, vec_col).collect()
     # sort by id so argmax tie-break 'lowest index wins' == 'lowest id wins'
     cent_rows.sort(key=lambda r: r[0])
@@ -137,26 +119,30 @@ def assign_centroids(
     zn = np.linalg.norm(Z, axis=1)
     sc = corpus.sparkSession.sparkContext
     bc = sc.broadcast((cids, Z, zn))
-    cid_type = centroids.schema[centroid_id].dataType
+    cid_field = StructField(centroid_id, centroids.schema[centroid_id].dataType)
+    cid_arrow = to_arrow_type(cid_field.dataType)
 
-    @F.pandas_udf(cid_type)
-    def nearest(vecs: pd.Series) -> pd.Series:
+    def nearest(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         cids_, Z_, zn_ = bc.value
-        V = np.array([np.asarray(v, dtype=np.float64) for v in vecs])
-        if V.ndim != 2:  # empty batch
-            return pd.Series([], dtype=object)
-        vn = np.linalg.norm(V, axis=1)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            sims = (V @ Z_.T) / (vn[:, None] * zn_[None, :])
-        sims = np.round(sims, 9)
-        # NaN-safe argmax with lowest-id tie-break: NaN columns lose to any
-        # number (window path: null sims sort last); all-NaN rows take the
-        # lowest id (window path: row_number ties break by centroid_id asc)
-        sims = np.nan_to_num(sims, nan=-np.inf)
-        best = np.argmax(sims, axis=1)  # first (lowest-id) max wins
-        return pd.Series([cids_[i] for i in best], index=vecs.index)
+        for rb in batches:
+            vecs = rb.column(vec_col)
+            V = vecs.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
+            V = V.reshape(len(vecs), -1) if len(vecs) else np.empty((0, Z_.shape[1]))
+            vn = np.linalg.norm(V, axis=1)
+            with np.errstate(divide="ignore", invalid="ignore"):
+                sims = (V @ Z_.T) / (vn[:, None] * zn_[None, :])
+            sims = np.round(sims, 9)
+            # NaN-safe argmax with lowest-id tie-break: NaN columns lose to any
+            # number (a window sorts null sims last); all-NaN rows take the
+            # lowest id (row_number ties break by centroid_id asc)
+            sims = np.nan_to_num(sims, nan=-np.inf)
+            best = np.argmax(sims, axis=1)  # first (lowest-id) max wins
+            yield pa.RecordBatch.from_arrays(
+                [*rb.columns, pa.array([cids_[i] for i in best], type=cid_arrow)],
+                names=[*rb.schema.names, centroid_id],
+            )
 
-    return corpus.withColumn(centroid_id, nearest(F.col(vec_col)))
+    return corpus.mapInArrow(nearest, StructType([*corpus.schema.fields, cid_field]))
 
 
 def deterministic_centroids(

@@ -305,19 +305,18 @@ def distance_band_join(
     right_lat: str = "cand_lat",
     right_lon: str = "cand_lon",
     score_col: str = "score_spatial",
-    broadcast_right: bool = False,
 ) -> DataFrame:
     """J5: equi-join then banded haversine distance score (functions.py:16-88).
 
     The reference round-trips one ST_Distance query PER candidate row
     (batch_georeferencing.py:524); here it's one join + a codegen'd distance
     expression — the single biggest algorithmic win over the reference
-    (SURVEY.md O10).
+    (SURVEY.md O10). The planner picks the join strategy: a small ``right``
+    plans as a broadcast hash join without a hint.
     """
     from .scoring import distance_band_score
 
-    r = F.broadcast(right) if broadcast_right else right
-    joined = left.join(r, on=on)
+    joined = left.join(right, on=on)
     dist = haversine_col(F.col(left_lon), F.col(left_lat), F.col(right_lon), F.col(right_lat))
     return joined.withColumn("distance_m", dist).withColumn(
         score_col, distance_band_score(F.col("distance_m"))

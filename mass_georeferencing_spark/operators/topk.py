@@ -1,8 +1,9 @@
-"""Top-k per group (W1/W2) and ranked display sorts (W3/W4).
+"""Top-k per group (W1) and ranked display sorts (W3/W4).
 
 Reference: ``candidates.nlargest(50, ['score1','score2','score_state','no_features'])``
-per record group (batch_georeferencing/functions.py:297-300); kNN top-1
-``ORDER BY ST_Distance LIMIT 1`` (functions.py:170-171).
+per record group (batch_georeferencing/functions.py:297-300). The kNN top-1
+(W2, ``ORDER BY ST_Distance LIMIT 1``, functions.py:170-171) is
+the kNN join with ``k=1`` (knn.py).
 
 Scale notes: ``row_number`` over a partitioned window is a single shuffle on the
 partition key with in-partition sort; Spark's window TopK pushes a per-partition
@@ -38,20 +39,6 @@ def topk_per_group(
     if rank_col:
         return out.withColumnRenamed("_rn", rank_col)
     return out.drop("_rn")
-
-
-def knn_top1(
-    df: DataFrame,
-    partition_cols: list[str],
-    distance_col: str = "distance_m",
-    tiebreak_col: str | None = "uid",
-) -> DataFrame:
-    """W2: nearest row per partition (ORDER BY distance LIMIT 1, functions.py:170)."""
-    order = [F.col(distance_col).asc_nulls_last()]
-    if tiebreak_col:
-        order.append(F.col(tiebreak_col).asc())
-    w = Window.partitionBy(*partition_cols).orderBy(*order)
-    return df.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") == 1).drop("_rn")
 
 
 def ranked_display_order(

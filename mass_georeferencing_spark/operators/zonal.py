@@ -3,13 +3,11 @@ batch_georeferencing/functions.py:145-230, generalized).
 
 The "raster" is a cell-indexed value table (grid_id/cell → value) — the engine's
 discrete-grid analog of a GeoTIFF; at 100 TB this is a parquet table partitioned
-by coarse cell prefix. Two operators:
-
-- ``point_value_lookup``: point → containing raster cell → value (one broadcast
-  or hash equi-join; the kNN fallback handles cells with no sample).
-- ``zonal_stats``: polygon → covering cells → join raster → aggregate per
-  polygon (mean/min/max/count). Cover explode is a generator; the join and agg
-  shuffle once each on the cell key, with map-side partial aggregation.
+by coarse cell prefix. ``rasterize_points`` builds it from point samples, and
+``zonal_stats`` aggregates it per polygon: polygon → covering cells → join
+raster → mean/min/max/count. Cover explode is a generator; the join and agg
+shuffle once each on the cell key, with map-side partial aggregation. A point's
+value comes from the kNN joins (knn.py), which also cover cells with no sample.
 """
 
 from __future__ import annotations
@@ -34,20 +32,6 @@ def rasterize_points(
         .groupBy("cell")
         .agg(F.avg(value_col).alias(value_col), F.count(F.lit(1)).alias("n_samples"))
     )
-
-
-def point_value_lookup(
-    points: DataFrame,
-    raster: DataFrame,
-    res: int,
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-    broadcast_raster: bool = False,
-) -> DataFrame:
-    """Point → raster-cell value (left join keeps points with no sample)."""
-    p = points.withColumn("cell", C.latlng_to_cell_col(F.col(lat_col), F.col(lon_col), res))
-    r = F.broadcast(raster) if broadcast_raster else raster
-    return p.join(r, on="cell", how="left")
 
 
 def zonal_stats(

@@ -229,12 +229,12 @@ def _hist_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # temporal window join: warc_ts in [valid_from, valid_to) — the reference
-    # carried these columns unused (queries.py:256-265); bucket strategy
+    # carried these columns unused (queries.py:256-265); time-bucket equi-join
     from ..operators.interval_join import interval_join
 
     pages = syn.pages_df(spark, sf_dir).select("url", "warc_ts")
     dims = _hist_dims(spark, sf_dir).select("uid", "valid_from", "valid_to")
-    out = interval_join(pages, dims, strategy="buckets", bucket_seconds=3600)
+    out = interval_join(pages, dims, bucket_seconds=3600)
     return out.select("url", "uid")
 
 

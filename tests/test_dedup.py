@@ -110,9 +110,10 @@ def test_embedding_lsh_near_dup(spark):
         rows.append((1000 + i, [float(x) for x in rng.standard_normal(64)], 0))
     df = spark.createDataFrame(rows, ["vec_id", "embedding", "label"])
 
+    # every row has label 0, so the blocked pair space is all pairs
     exact = {
         (r.id_a, r.id_b)
-        for r in dedup.embedding_near_dup_pairs(df, threshold=0.95, block_col=None).collect()
+        for r in dedup.embedding_near_dup_pairs(df, threshold=0.95, block_col="label").collect()
     }
     lsh = {
         (r.id_a, r.id_b)
@@ -122,20 +123,6 @@ def test_embedding_lsh_near_dup(spark):
     assert len(exact) == 15  # 5 clusters x C(3,2)
     recall = len(lsh) / len(exact)
     assert recall >= 0.8, recall  # near-identical vectors collide in >=1 band
-
-
-def test_embedding_near_dup_unblocked_overflow_raises(spark):
-    # the unblocked all-pairs path is a guarded equivalence baseline: above
-    # the cap it must fail loud and name the scale path, never crossJoin
-    rows = [(i, [float(i), 1.0], 0) for i in range(12)]
-    df = spark.createDataFrame(rows, ["vec_id", "embedding", "label"])
-    with pytest.raises(ValueError, match="embedding_lsh_near_dup"):
-        dedup.embedding_near_dup_pairs(df, block_col=None, max_unblocked=10)
-    # at/below the cap the baseline still runs
-    ok = dedup.embedding_near_dup_pairs(
-        df.limit(10), block_col=None, max_unblocked=10
-    )
-    assert ok.count() >= 0
 
 
 def test_ngram_jaccard_exact_and_blocked(spark):

@@ -20,8 +20,8 @@ def _check_all(a_list, b_list):
 
 
 def test_known_cases():
-    a = ["", "", "abc", "spark table", "new york", "sao paulo brazil", "a" * 80]
-    b = ["", "x", "abc", "spark table scan", "york new", "paulo", "a" * 100 + "b"]
+    a = ["", "", "abc", "spark table", "new york", "sao paulo brazil", "a" * 80, "\x01", "a\x00b"]
+    b = ["", "x", "abc", "spark table scan", "york new", "paulo", "a" * 100 + "b", "\x00", "a\x01b"]
     _check_all(a, b)
 
 

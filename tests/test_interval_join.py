@@ -1,6 +1,8 @@
-"""Interval + as-of join: bucket strategy equals broadcast nested-loop truth."""
+"""Interval + as-of join: the time-bucket join equals broadcast nested-loop truth."""
 
 from datetime import datetime
+
+from pyspark.sql import functions as F
 
 from mass_georeferencing_spark.operators.interval_join import as_of_join, interval_join
 
@@ -11,6 +13,13 @@ def _ts(h, m=0):
     return datetime(2024, 1, 1, h, m)
 
 
+def _broadcast_interval_join(facts, dims):
+    """Reference: the non-equi predicate over broadcast dims, planned as a
+    BroadcastNestedLoopJoin."""
+    cond = (F.col("warc_ts") >= F.col("valid_from")) & (F.col("warc_ts") < F.col("valid_to"))
+    return facts.join(F.broadcast(dims), on=cond)
+
+
 def test_interval_bucket_matches_broadcast(spark):
     facts = spark.createDataFrame(
         [(f"f{i}", _ts(i % 24, (i * 7) % 60)) for i in range(200)], ["fid", "warc_ts"]
@@ -19,17 +28,17 @@ def test_interval_bucket_matches_broadcast(spark):
         [(f"d{j}", _ts(j % 20), _ts(j % 20 + 3)) for j in range(10)],
         ["uid", "valid_from", "valid_to"],
     )
-    bc = {(r.fid, r.uid) for r in interval_join(facts, dims, strategy="broadcast").collect()}
+    bc = {(r.fid, r.uid) for r in _broadcast_interval_join(facts, dims).collect()}
     bk = {
         (r.fid, r.uid)
-        for r in interval_join(facts, dims, strategy="buckets", bucket_seconds=3600).collect()
+        for r in interval_join(facts, dims, bucket_seconds=3600).collect()
     }
     assert bc == bk
     assert len(bc) > 0
     # half-open: a fact exactly at valid_to is excluded
     f2 = spark.createDataFrame([("x", _ts(5))], ["fid", "warc_ts"])
     d2 = spark.createDataFrame([("d", _ts(2), _ts(5))], ["uid", "valid_from", "valid_to"])
-    assert interval_join(f2, d2, strategy="buckets", bucket_seconds=3600).count() == 0
+    assert interval_join(f2, d2, bucket_seconds=3600).count() == 0
 
 
 def test_as_of_join_latest_version(spark):

@@ -1,16 +1,21 @@
-"""Static physical-plan shape of the georeference chain (AQE off, as
-tools/explain_audit.py and test_spatial_ops.py plan it): the properties the
-scale design depends on, checked on every tier-1 run."""
+"""Static physical-plan shape (AQE off, so the plan shows its codegen spans
+and join strategies before execution): the properties the scale design
+depends on — pushdown and pruning at the scan, broadcast dimension joins,
+codegen'd relational stages, Python only at the designed Arrow boundaries,
+and each Python kernel evaluated once — checked on every tier-1 run."""
 
 import re
 
 import pytest
+from pyspark.sql import functions as F
 
 from mass_georeferencing_spark.operators.fuzzy_join import fuzzy_candidate_join, fuzzy_mean_join
 from mass_georeferencing_spark.operators.layers import normalize_candidates
 from mass_georeferencing_spark.operators.record_groups import build_record_groups
+from mass_georeferencing_spark.plans.contract_ext import queries_ext
 from mass_georeferencing_spark.plans.pipeline import georeference_frames
 from mass_georeferencing_spark.sources import synthetic as syn
+from mass_georeferencing_spark.sources.tables import load_table
 
 from conftest import SF_DIR
 
@@ -82,6 +87,21 @@ def test_fuzzy_kernels_score_each_pair_once(static_plan, fuzzy_inputs, join, kwa
     assert len(scoring) == 2, "\n".join(nodes)
 
 
+@pytest.mark.parametrize(
+    "row, kernel", [("dedup_minhash_pairs", "jacc"), ("ann_ivf_topk", "nearest")]
+)
+def test_corpus_kernels_score_each_row_once(spark, static_plan, row, kernel):
+    # the same lesson-9 defect outside the fuzzy join: a filter on a Python
+    # kernel's output (the Jaccard threshold, or an isnotnull inferred from
+    # the join on the assigned centroid) must not duplicate its node. (The
+    # plan prints a persisted subtree once per reader, so only the kernel's
+    # own node count is pinned.)
+    plan = static_plan(queries_ext()[row](spark, SF_DIR))
+    nodes = [ln for ln in plan.splitlines() if PYTHON_NODE.search(ln)]
+    scoring = [ln for ln in nodes if kernel in {m.group(1) for m in UDF_CALL.finditer(ln)}]
+    assert len(scoring) == 1, "\n".join(nodes)
+
+
 def test_e2e_candidate_joins_not_forced_broadcast(spark, static_plan):
     # candidate_id sides grow with the data (top-k × #groups), so their joins
     # stay AQE-decided. With AQE off an unhinted join on them plans as
@@ -95,3 +115,129 @@ def test_e2e_candidate_joins_not_forced_broadcast(spark, static_plan):
     plan = static_plan(kept)
     assert "SortMergeJoin [candidate_id" in plan
     assert "BroadcastHashJoin [candidate_id" not in plan
+
+
+# plan properties, as they print in a static executed plan
+PLAN_HAS = {
+    "pushdown": re.compile(r"PushedFilters: \[[^\]]*(?:IsNotNull|EqualTo)"),
+    "pruned_scan": re.compile(r"ReadSchema: [^\n]*struct<[^>]{0,200}>"),
+    "broadcast_join": re.compile(r"BroadcastHashJoin"),
+    "codegen": re.compile(r"\*\(\d+\) "),
+    "python": PYTHON_NODE,
+    "exchange": re.compile(r"Exchange"),
+    "shuffle": re.compile(r"(?<!Broadcast)Exchange"),
+}
+
+
+def _filtered_scan(spark):
+    docs = load_table(spark, SF_DIR, "documents")
+    return docs.where(F.col("lang") == "en").select("doc_id", "lang")
+
+
+def _dim_join(spark):
+    nation = load_table(spark, SF_DIR, "nation")
+    region = load_table(spark, SF_DIR, "region")
+    return nation.join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
+
+
+def _located_mentions(spark):
+    return syn.mentions_df(spark, SF_DIR).where(F.col("lat").isNotNull())
+
+
+def _pip_join(spark):
+    from mass_georeferencing_spark.operators.spatial import pip_join
+
+    aoi = syn.aoi_wkb_df(spark, SF_DIR)
+    return pip_join(_located_mentions(spark), aoi, strategy="broadcast", res=4)
+
+
+def _cell_assign(spark):
+    from mass_georeferencing_spark.functions.cells import latlng_to_cell_col
+
+    return _located_mentions(spark).select(
+        latlng_to_cell_col(F.col("lat"), F.col("lon"), 12).alias("cell")
+    )
+
+
+def _gadm_aliases(spark):
+    from mass_georeferencing_spark.operators.layers import gadm_alias_names
+
+    return gadm_alias_names(syn.gadm_df(spark, SF_DIR), syn.state_abbreviations_df(spark))
+
+
+def _j12_knn_fallback(spark):
+    from mass_georeferencing_spark.operators.spatial import signflip_knn_fallback
+
+    pts = (
+        _located_mentions(spark)
+        .dropDuplicates(["url"])
+        .select("url", "lat", "lon")
+        .withColumn("claimed_polygon", F.lit("aoi:0"))
+    )
+    return signflip_knn_fallback(pts, syn.aoi_wkb_df(spark, SF_DIR), k=3)
+
+
+def _training_prep(spark):
+    from mass_georeferencing_spark.plans.training_prep import prepare_training_corpus
+
+    return prepare_training_corpus(spark, SF_DIR)["corpus"]
+
+
+def _html_extract(spark):
+    from mass_georeferencing_spark.operators.extract import extract_text_col
+
+    pages = syn.pages_df(spark, SF_DIR)
+    return pages.select("url", extract_text_col(F.col("html")).alias("extracted"))
+
+
+def _fuzzy_mean_dedup(spark):
+    groups = build_record_groups(syn.mentions_df(spark, SF_DIR))
+    return fuzzy_mean_join(groups, normalize_candidates(syn.gazetteer_df(spark, SF_DIR)))
+
+
+def _j5_distance_band(spark):
+    import __spark_entry__
+
+    return __spark_entry__._q_j5_distance_band(spark, SF_DIR)
+
+
+def _f7_countrycode(spark):
+    from mass_georeferencing_spark.operators.countrycode import normalize_country_codes
+
+    return normalize_country_codes(
+        syn.occ_country_df(spark, SF_DIR), syn.countries_df(spark, SF_DIR)
+    )
+
+
+PLAN_CASES = [
+    # filters and the projection reach the parquet scan
+    (_filtered_scan, ["pushdown", "pruned_scan", "codegen"], []),
+    (_dim_join, ["broadcast_join", "codegen"], []),
+    # the cover table is broadcast; the ray-cast refine is the Arrow pass
+    (_pip_join, ["broadcast_join", "python"], []),
+    # cell ids are JVM Column math
+    (_cell_assign, [], ["python"]),
+    # projections, generators and one broadcast abbreviation join
+    (_gadm_aliases, ["broadcast_join", "codegen"], ["python"]),
+    # the PIP refine and the broadcast-kNN matrix are the Arrow passes
+    (_j12_knn_fallback, ["python", "codegen"], []),
+    # quality filters are codegen; lang-ID and minhash the Arrow passes
+    (_training_prep, ["pruned_scan", "python", "codegen"], []),
+    # one codegen'd regexp chain over the scan: scan-bound, no shuffle
+    (_html_extract, ["pruned_scan", "codegen"], ["python", "exchange"]),
+    # both kernels on distinct pairs, score maps broadcast back
+    (_fuzzy_mean_dedup, ["broadcast_join", "python", "codegen"], []),
+    # the planner broadcasts the small side of the J5 join without a hint
+    (_j5_distance_band, ["broadcast_join", "codegen"], ["python", "shuffle"]),
+    # dim lookups and the verbatim map are broadcast joins, no Python
+    (_f7_countrycode, ["broadcast_join", "codegen"], ["python"]),
+]
+
+
+@pytest.mark.parametrize(
+    "build, present, absent", PLAN_CASES, ids=[c[0].__name__.lstrip("_") for c in PLAN_CASES]
+)
+def test_plan_properties(spark, static_plan, build, present, absent):
+    plan = static_plan(build(spark))
+    assert [p for p in present if not PLAN_HAS[p].search(plan)] == [], plan
+    assert [p for p in absent if PLAN_HAS[p].search(plan)] == [], plan

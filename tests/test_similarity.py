@@ -1,9 +1,11 @@
 """ANN similarity tests: brute-force exactness, IVF recall vs brute force."""
 
 import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from mass_georeferencing_spark.operators import similarity
+from mass_georeferencing_spark.operators.dedup import cosine_col
 
 from conftest import SF_DIR
 
@@ -11,6 +13,40 @@ from conftest import SF_DIR
 @pytest.fixture(scope="module")
 def emb(spark):
     return spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+
+
+def _as_double(df, out):
+    return df.withColumn(out, F.transform(F.col("embedding"), lambda x: x.cast("double")))
+
+
+def _window_assign_centroids(corpus, centroids):
+    """Reference: broadcast crossJoin + per-vector top-1 window, ordered by
+    round(cosine, 9) desc, centroid_id asc."""
+    cent = _as_double(centroids, "_zv").select("centroid_id", "_zv")
+    joined = _as_double(corpus, "_cv").crossJoin(F.broadcast(cent))
+    joined = joined.withColumn("_sim", cosine_col(F.col("_cv"), F.col("_zv")))
+    w = Window.partitionBy("vec_id").orderBy(
+        F.round(F.col("_sim"), 9).desc(), F.col("centroid_id").asc()
+    )
+    return joined.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") == 1)
+
+
+def _window_only_topk(queries, corpus, k):
+    """Reference: the exact top-k as one per-query window over the whole
+    broadcast cross product, with no map-side partial top-k."""
+    q = _as_double(queries, "_qv").select("query_id", "_qv")
+    c = _as_double(corpus, "_cv").select("vec_id", "_cv")
+    scored = c.crossJoin(F.broadcast(q)).withColumn(
+        "cosine", cosine_col(F.col("_qv"), F.col("_cv"))
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.round(F.col("cosine"), 9).desc(), F.col("vec_id").asc()
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", "vec_id", F.round(F.col("cosine"), 6).alias("cosine"), "rank")
+    )
 
 
 def test_brute_force_topk_self_is_rank1(spark, emb):
@@ -92,16 +128,10 @@ def test_ivf_recall_holds_with_lloyd(spark, emb):
 
 def test_assign_centroids_mapside_matches_window(spark, emb):
     # the zero-shuffle numpy-argmax assignment must be row-identical to the
-    # all-DataFrame crossJoin+window baseline (same round-9 + lowest-id ties)
+    # all-DataFrame crossJoin+window reference (same round-9 + lowest-id ties)
     cents = similarity.deterministic_centroids(emb, 8)
-    m = {
-        r.vec_id: r.centroid_id
-        for r in similarity.assign_centroids(emb, cents, strategy="mapside").collect()
-    }
-    w = {
-        r.vec_id: r.centroid_id
-        for r in similarity.assign_centroids(emb, cents, strategy="window").collect()
-    }
+    m = {r.vec_id: r.centroid_id for r in similarity.assign_centroids(emb, cents).collect()}
+    w = {r.vec_id: r.centroid_id for r in _window_assign_centroids(emb, cents).collect()}
     assert m == w and len(m) == emb.count()
 
 
@@ -110,7 +140,7 @@ def test_assign_centroids_mapside_plan_has_no_exchange(spark, emb):
     from contextlib import redirect_stdout
 
     cents = similarity.deterministic_centroids(emb, 8)
-    df = similarity.assign_centroids(emb, cents, strategy="mapside")
+    df = similarity.assign_centroids(emb, cents)
     buf = io.StringIO()
     with redirect_stdout(buf):
         df.explain("formatted")
@@ -124,10 +154,10 @@ def test_brute_force_partial_matches_window_only(spark, emb):
     corpus = emb.repartition(8)  # several partitions so the partial stage acts
     a = sorted(
         (r.query_id, r.rank, r.vec_id, r.cosine)
-        for r in similarity.brute_force_topk(queries, corpus, k=4, partial=True).collect()
+        for r in similarity.brute_force_topk(queries, corpus, k=4).collect()
     )
     b = sorted(
         (r.query_id, r.rank, r.vec_id, r.cosine)
-        for r in similarity.brute_force_topk(queries, corpus, k=4, partial=False).collect()
+        for r in _window_only_topk(queries, corpus, k=4).collect()
     )
     assert a == b and len(a) == 7 * 4

@@ -141,7 +141,7 @@ def test_knn_join_exact_on_edge_fixture(spark, res):
 def test_knn_join_round_plan_shape(spark, monkeypatch):
     # every checkpointed round frame is pure JVM, and the round's top-k is cut
     # by a partial WindowGroupLimit before the first exchange above the
-    # distance projection (static plans: AQE off, as tools/explain_audit.py)
+    # distance projection (static plans: AQE off, as tests/test_plan_shape.py)
     qrows, trows = _knn_edge_fixture()
     q = spark.createDataFrame(qrows, ["query_id", "lat", "lon"])
     t = spark.createDataFrame(trows, ["target_id", "target_lat", "target_lon"])
@@ -176,6 +176,16 @@ def test_knn_join_round_plan_shape(spark, monkeypatch):
         first_exchange = next(i for i in ancestors if "Exchange" in lines[i])
         below = [lines[i] for i in ancestors if i > first_exchange]
         assert any("WindowGroupLimit" in ln and "Partial" in ln for ln in below), plan
+
+
+def test_knn_join_round_cap_fails_loud(spark):
+    # the only target lies ~18 res-6 cells east of the query, beyond the last
+    # ring the round cap reaches: the query never settles, and an empty or
+    # unproven top-k must not come back as if it were exact
+    q = spark.createDataFrame([("q0", 0.0, 0.0)], ["query_id", "lat", "lon"])
+    t = spark.createDataFrame([("t0", 0.0, 100.0)], ["target_id", "target_lat", "target_lon"])
+    with pytest.raises(RuntimeError, match="1 queries unsettled after MAX_ROUNDS=12 rounds"):
+        knn_join(q, t, k=1, res=6)
 
 
 def test_zonal_stats_rect(spark):
