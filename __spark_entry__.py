@@ -30,24 +30,14 @@ from mass_georeferencing_spark.functions.textnorm import garbage_locality_filter
 from mass_georeferencing_spark.operators.layers import explode_alternate_names
 from mass_georeferencing_spark.operators.record_groups import build_record_groups, group_id
 from mass_georeferencing_spark.operators.scoring import (
-    drop_empty_groups,
     elevation_band_score,
-    group_candidate_counts,
-    mean_scores,
     melt_scores,
     prune_low_scores,
 )
 from mass_georeferencing_spark.operators.topk import topk_per_group
+from mass_georeferencing_spark.plans.contract_ext import _HAV
 from mass_georeferencing_spark.sources import synthetic as syn
 from mass_georeferencing_spark.sources.tables import load_table
-
-# DuckDB-dialect haversine twin of functions/geo.py:haversine_col
-_HAV = (
-    "2.0 * 6371008.8 * asin(sqrt(least(1.0, "
-    "pow(sin((radians({lat2}) - radians({lat1})) / 2), 2) + "
-    "cos(radians({lat1})) * cos(radians({lat2})) * "
-    "pow(sin((radians({lon2}) - radians({lon1})) / 2), 2))))"
-)
 
 
 _shipped = False
@@ -404,8 +394,7 @@ def oracle_sql() -> dict[str, str]:
     )
 
     W = syn.with_ctes
-    hav_grid = _HAV.format(lat1="m.lat", lon1="m.lon", lat2="g.lat", lon2="g.lon")
-    hav_adm = _HAV.format(lat1="m.lat", lon1="m.lon", lat2="g.lat", lon2="g.lon")
+    hav = _HAV.format(lat1="m.lat", lon1="m.lon", lat2="g.lat", lon2="g.lon")
     return {
         **oracle_ext(),
         **oracle_ext2(),
@@ -547,9 +536,9 @@ def oracle_sql() -> dict[str, str]:
         "j5_distance_band": W(
             f"""
             SELECT m.url, m.mention, g.uid,
-                   round({hav_adm}, 1) AS distance_m,
-                   CASE WHEN {hav_adm} <= 0 THEN 100 WHEN {hav_adm} <= 10000 THEN 95
-                        WHEN {hav_adm} <= 50000 THEN 85 WHEN {hav_adm} <= 100000 THEN 75
+                   round({hav}, 1) AS distance_m,
+                   CASE WHEN {hav} <= 0 THEN 100 WHEN {hav} <= 10000 THEN 95
+                        WHEN {hav} <= 50000 THEN 85 WHEN {hav} <= 100000 THEN 75
                         ELSE 60 END AS score_spatial
             FROM mentions m
             JOIN gazetteer g ON g.lang = m.lang AND g.data_source = 'admin'
@@ -563,14 +552,14 @@ def oracle_sql() -> dict[str, str]:
             f"""
             SELECT url, grid_id, distance_m, score_elev FROM (
               SELECT m.url, g.grid_id,
-                     round({hav_grid}, 1) AS distance_m,
+                     round({hav}, 1) AS distance_m,
                      CASE WHEN abs((m.doc_id * 17) % 3000 - g.elev_m) <= 100 THEN 100
                           WHEN abs((m.doc_id * 17) % 3000 - g.elev_m) <= 300 THEN 90
                           WHEN abs((m.doc_id * 17) % 3000 - g.elev_m) <= 600 THEN 80
                           WHEN abs((m.doc_id * 17) % 3000 - g.elev_m) <= 1000 THEN 70
                           ELSE 20 END AS score_elev,
                      ROW_NUMBER() OVER (PARTITION BY m.url
-                       ORDER BY {hav_grid} ASC, g.grid_id ASC) AS rn
+                       ORDER BY {hav} ASC, g.grid_id ASC) AS rn
               FROM q m CROSS JOIN elev_grid g)
             WHERE rn = 1
             """,

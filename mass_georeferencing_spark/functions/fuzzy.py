@@ -1,4 +1,4 @@
-"""Fuzzy string-similarity kernels (pure Python/pandas, Arrow-batch friendly).
+"""Fuzzy string-similarity kernels (pure Python scalar reference).
 
 Reimplements the scoring family the reference applies row-at-a-time via
 ``fuzz.partial_ratio`` / ``fuzz.token_set_ratio``
@@ -13,9 +13,10 @@ algorithms are public and well documented; we implement them from scratch:
 - ``token_set_ratio`` — max ratio over the {intersection, intersection+diff1,
   intersection+diff2} sorted-token reconstructions.
 
-These run inside pandas UDFs over *deduplicated* (left, right) pairs — the engine
-dedups pairs before scoring and joins scores back, so the per-pair Python cost is
-paid once per distinct pair, not once per row (see operators/fuzzy_join.py).
+These scalar functions define the scores: the vectorized kernels in
+functions/fuzzy_batch.py match them bit-for-bit and fall back to them for long
+strings. The fuzzy join scores its distinct (left, right) pairs with those kernels
+in one ``mapInArrow`` pass (see operators/fuzzy_join.py).
 
 Scores are floats in [0, 100]; the reference stores them as ints (DB column
 ``mg_candidates_scores.score int``, database/mass_georef_database.sql:335) — callers
@@ -23,8 +24,6 @@ round at write time.
 """
 
 from __future__ import annotations
-
-import pandas as pd
 
 
 def lcs_len(a: str, b: str) -> int:
@@ -169,35 +168,3 @@ def token_set_ratio(a: str, b: str) -> float:
     if inter and not d_ab and not d_ba:
         return 100.0
     return max(ratio(s0, s1), ratio(s0, s2), ratio(s1, s2))
-
-
-# ---------------------------------------------------------------------------
-# Batch (pandas Series) wrappers — used inside pandas UDFs / mapInPandas.
-# ---------------------------------------------------------------------------
-
-
-def _batch(fn, left: pd.Series, right: pd.Series) -> pd.Series:
-    lv = left.fillna("").astype(str).to_numpy()
-    rv = right.fillna("").astype(str).to_numpy()
-    cache: dict[tuple[str, str], float] = {}
-    out = [0.0] * len(lv)
-    for i in range(len(lv)):
-        key = (lv[i], rv[i])
-        val = cache.get(key)
-        if val is None:
-            val = fn(key[0], key[1])
-            cache[key] = val
-        out[i] = val
-    return pd.Series(out, index=left.index, dtype="float64")
-
-
-def batch_ratio(left: pd.Series, right: pd.Series) -> pd.Series:
-    return _batch(ratio, left, right)
-
-
-def batch_partial_ratio(left: pd.Series, right: pd.Series) -> pd.Series:
-    return _batch(partial_ratio, left, right)
-
-
-def batch_token_set_ratio(left: pd.Series, right: pd.Series) -> pd.Series:
-    return _batch(token_set_ratio, left, right)

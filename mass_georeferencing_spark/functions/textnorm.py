@@ -12,20 +12,30 @@ Reference semantics (pinned by tests/test_textnorm.py):
 - garbage-locality filter (queries.py:18):
   ``lower(locality) not in ('none', 'unknown', 'no locality data')``.
 
-The fold and stopword strip are pandas-vectorized (``Series.str.normalize`` is a
-C-level loop; the stopword strip is a single compiled regex substitution) and exposed
-both as Series kernels (for use inside other pandas UDFs) and as ready-made
-``pandas_udf`` columns.
+The fold and the stopword strip are JVM Column expressions, so the record-group
+and candidate stages never cross into Python:
+
+- the fold is ``translate`` through a table of the non-ASCII code points whose NFD
+  keeps an ASCII character (495 under Unicode 14.0, each to exactly one ASCII
+  character), then ``regexp_replace`` drops every remaining non-ASCII code point.
+  This equals the reference per string, not only per code point: NFD decomposes
+  each character on its own, and canonical reordering only permutes combining
+  marks, none of which is ASCII, so the fold of a string is the concatenation of
+  the folds of its characters.
+- the strip splits on ``str.isspace()`` whitespace (29 code points, spelled out as
+  one Java character class because Java's ``\\s`` is ASCII-only) and keeps the
+  non-empty, non-stopword tokens, which is ``str.split()`` then the filter.
+
+NULL normalizes to ``''`` under both.
 """
 
 from __future__ import annotations
 
-import re
+import functools
+import unicodedata
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
 
 # The NLTK English stopword list (public, frozen here for determinism — the
 # reference loads it via nltk.corpus.stopwords.words('english'),
@@ -53,43 +63,43 @@ ENGLISH_STOPWORDS: tuple[str, ...] = (
     "wouldn't",
 )
 
-_STOPWORD_SET = frozenset(ENGLISH_STOPWORDS)
-# token-boundary regex alternation; longest-first so "don't" beats "don"
-_STOPWORD_RE = re.compile(
-    r"(?:(?<=\s)|^)(?:"
-    + "|".join(re.escape(w) for w in sorted(_STOPWORD_SET, key=len, reverse=True))
-    + r")(?=\s|$)"
-)
-_WS_RE = re.compile(r"\s+")
-
 GARBAGE_LOCALITIES = ("none", "unknown", "no locality data")
 
-
-def strip_stopwords_series(s: pd.Series) -> pd.Series:
-    """Drop exact (case-sensitive) NLTK stopword tokens; collapse whitespace."""
-    filled = s.fillna("").astype(str)
-    out = filled.str.replace(_STOPWORD_RE, "", regex=True)
-    return out.str.replace(_WS_RE, " ", regex=True).str.strip()
+# the code points str.isspace() accepts, as one Java character class
+_WS_CLASS = r"[\t\n\x0B\f\r\x1C-\x20\x85\xA0\u1680\u2000-\u200A\u2028\u2029\u202F\u205F\u3000]"
 
 
-def ascii_fold_series(s: pd.Series) -> pd.Series:
-    """NFD-normalize then drop non-ASCII bytes (reference fold, byte-for-byte)."""
-    filled = s.fillna("").astype(str)
-    return (
-        filled.str.normalize("NFD")
-        .str.encode("ascii", errors="ignore")
-        .str.decode("utf-8")
-    )
+@functools.cache
+def _fold_table() -> tuple[str, str]:
+    """(FROM, TO) for ``translate``: each non-ASCII code point whose NFD keeps an
+    ASCII character, and that character. Built on the driver at first use (a
+    fraction of a second), so Python workers that import this module never
+    build it."""
+    src, dst = [], []
+    for cp in range(0x80, 0x110000):
+        c = chr(cp)
+        # a character already in NFD is itself, and non-ASCII: it folds to ''
+        if unicodedata.is_normalized("NFD", c):
+            continue
+        kept = unicodedata.normalize("NFD", c).encode("ascii", "ignore").decode("ascii")
+        if kept:
+            src.append(c)
+            dst.append(kept)
+    return "".join(src), "".join(dst)
 
 
-@F.pandas_udf(StringType())
-def strip_stopwords_udf(s: pd.Series) -> pd.Series:
-    return strip_stopwords_series(s)
+def strip_stopwords(col: Column) -> Column:
+    """Drop exact (case-sensitive) NLTK stopword tokens; single-space the rest."""
+    words = F.split(F.coalesce(col, F.lit("")), _WS_CLASS + "+")
+    kept = F.filter(words, lambda w: (w != "") & ~w.isin(*ENGLISH_STOPWORDS))
+    return F.array_join(kept, " ")
 
 
-@F.pandas_udf(StringType())
-def ascii_fold_udf(s: pd.Series) -> pd.Series:
-    return ascii_fold_series(s)
+def ascii_fold(col: Column) -> Column:
+    """NFD-normalize then drop non-ASCII (reference fold, byte-for-byte)."""
+    src, dst = _fold_table()
+    folded = F.translate(F.coalesce(col, F.lit("")), src, dst)
+    return F.regexp_replace(folded, r"[^\x00-\x7F]", "")
 
 
 def located_at(*cols: Column) -> Column:

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.textnorm import ascii_fold_udf
+from ..functions.textnorm import ascii_fold
 
 CANDIDATE_COLS = ("uid", "name", "stateprovince", "data_source")
 
@@ -138,8 +138,8 @@ def normalize_candidates(layer: DataFrame) -> DataFrame:
     and exact-dedup on the candidate key columns present (queries.py:57
     GROUP BY)."""
     return (
-        layer.withColumn("name_folded", ascii_fold_udf(F.col("name")))
-        .withColumn("stateprovince_folded", ascii_fold_udf(F.col("stateprovince")))
+        layer.withColumn("name_folded", ascii_fold(F.col("name")))
+        .withColumn("stateprovince_folded", ascii_fold(F.col("stateprovince")))
         .dropDuplicates([c for c in CANDIDATE_COLS if c in layer.columns])
     )
 

@@ -14,15 +14,12 @@ boundary once; binary payloads stay columnar (no per-row pickling).
 from __future__ import annotations
 
 import hashlib
-import struct
 from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-MEDIA_SCHEMA = "media_id string, kind string, payload binary, mime string, width int, height int, duration_s double"
 
 
 def _fake_features(payload: bytes, dim: int) -> np.ndarray:

@@ -20,10 +20,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.textnorm import (
-    ascii_fold_udf,
+    ascii_fold,
     garbage_locality_filter,
     normalize_key,
-    strip_stopwords_udf,
+    strip_stopwords,
 )
 
 
@@ -73,7 +73,7 @@ def build_record_groups(
         "mention",
         "state",
         normalize_key(F.col("mention")).alias("mention_norm"),
-        ascii_fold_udf(F.col("mention")).alias("mention_folded"),
-        ascii_fold_udf(strip_stopwords_udf(F.col("mention"))).alias("mention_nostop_folded"),
+        ascii_fold(F.col("mention")).alias("mention_folded"),
+        ascii_fold(strip_stopwords(F.col("mention"))).alias("mention_nostop_folded"),
         "no_records",
     )

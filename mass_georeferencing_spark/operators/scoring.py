@@ -50,12 +50,6 @@ def elevation_band_score(elev_diff_m: Column) -> Column:
     )
 
 
-ELEVATION_BAND_SQL = (
-    "CASE WHEN abs({d}) <= 100 THEN 100 WHEN abs({d}) <= 300 THEN 90 "
-    "WHEN abs({d}) <= 600 THEN 80 WHEN abs({d}) <= 1000 THEN 70 ELSE 20 END"
-)
-
-
 def melt_scores(
     candidates: DataFrame,
     id_col: str = "candidate_id",

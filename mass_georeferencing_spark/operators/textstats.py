@@ -15,7 +15,7 @@ from collections import Counter
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, StringType
+from pyspark.sql.types import StringType
 
 from ..functions.textnorm import ENGLISH_STOPWORDS
 
@@ -30,11 +30,6 @@ def token_count(text: Column) -> Column:
     trimmed = F.trim(text)
     return F.when(trimmed == "", F.lit(0)).otherwise(F.size(F.split(trimmed, r"\s+")))
 
-
-TOKEN_COUNT_SQL = (
-    "CASE WHEN trim({t}) = '' THEN 0 "
-    "ELSE len(regexp_split_to_array(trim({t}), '\\s+')) END"
-)
 
 # BPE-ish subword-boundary tokenizer: word runs and individual punctuation marks
 # each count as a token (the pre-tokenization regex family GPT-style BPEs use)

@@ -24,7 +24,6 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.cells import Y_BITS
 from ..operators import decontam, dedup, multimodal, sampling, similarity, textstats, zonal
 from ..operators.record_groups import build_record_groups, group_id
 from ..sources import synthetic as syn

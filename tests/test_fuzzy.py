@@ -1,15 +1,10 @@
 """Kernel tests for the fuzzy similarity family (SURVEY.md J1 semantics)."""
 
-import numpy as np
-import pandas as pd
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from mass_georeferencing_spark.functions.fuzzy import (
-    batch_partial_ratio,
-    batch_ratio,
-    batch_token_set_ratio,
     indel_distance,
     lcs_len,
     partial_ratio,
@@ -84,17 +79,3 @@ def test_token_set_ratio():
     v = token_set_ratio("lake tahoe", "tahoe city")
     assert 0 < v < 100
 
-
-def test_batch_wrappers_match_scalar():
-    left = pd.Series(["yosemite", "São Paulo", None, "abc"])
-    right = pd.Series(["yosemite valley", "sao paulo", "x", "abc"])
-    br = batch_ratio(left, right)
-    bp = batch_partial_ratio(left, right)
-    bt = batch_token_set_ratio(left, right)
-    for i in range(len(left)):
-        a = left.fillna("")[i]
-        b = right.fillna("")[i]
-        assert br[i] == ratio(a, b)
-        assert bp[i] == partial_ratio(a, b)
-        assert bt[i] == token_set_ratio(a, b)
-    assert br.dtype == np.float64

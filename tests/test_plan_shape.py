@@ -13,7 +13,7 @@ from mass_georeferencing_spark.operators.fuzzy_join import fuzzy_candidate_join,
 from mass_georeferencing_spark.operators.layers import normalize_candidates
 from mass_georeferencing_spark.operators.record_groups import build_record_groups
 from mass_georeferencing_spark.plans.contract_ext import queries_ext
-from mass_georeferencing_spark.plans.pipeline import georeference_frames
+from mass_georeferencing_spark.plans.pipeline import georeference, georeference_frames
 from mass_georeferencing_spark.sources import synthetic as syn
 from mass_georeferencing_spark.sources.tables import load_table
 
@@ -42,12 +42,9 @@ def fuzzy_inputs(spark):
 def test_fuzzy_join_broadcast_pair_generator(static_plan, fuzzy_inputs):
     lines = static_plan(fuzzy_candidate_join(*fuzzy_inputs)).splitlines()
 
-    # Arrow batches are the only Python boundary: the scoring passes are
-    # MapInArrow, the upstream text-folding UDFs ArrowEvalPython
-    assert {m for ln in lines for m in PYTHON_NODE.findall(ln)} == {
-        "ArrowEvalPython",
-        "MapInArrow",
-    }
+    # the scoring passes are the only Python boundary: the text folding
+    # upstream of them is JVM Column expressions
+    assert {m for ln in lines for m in PYTHON_NODE.findall(ln)} == {"MapInArrow"}
 
     # the pair space is generated by a broadcast join in the scoring pass's
     # own stage: from the pair-scoring node down to the pair join there is
@@ -85,6 +82,26 @@ def test_fuzzy_kernels_score_each_pair_once(static_plan, fuzzy_inputs, join, kwa
     # Python node
     scoring = [ln for ln in nodes if {m.group(1) for m in UDF_CALL.finditer(ln)} & KERNELS]
     assert len(scoring) == 2, "\n".join(nodes)
+
+
+def test_georef_python_only_in_scoring(spark, static_plan):
+    # the georeference dataflow crosses into Python only to score: the record
+    # groups and the candidates (stopword strip, ASCII fold) are pure JVM, and
+    # every Python node under `kept` is one of the two scoring MapInArrow passes
+    frames = georeference(spark, SF_DIR)
+    try:
+        for name in ("groups", "candidates"):
+            plan = static_plan(frames[name])
+            assert not PYTHON_NODE.search(plan), f"{name}:\n{plan}"
+        nodes = [ln for ln in static_plan(frames["kept"]).splitlines() if PYTHON_NODE.search(ln)]
+        assert nodes, "no scoring pass in the kept plan"
+        for ln in nodes:
+            assert PYTHON_NODE.findall(ln) == ["MapInArrow"], "\n".join(nodes)
+            kernels = {m.group(1) for m in UDF_CALL.finditer(ln)}
+            assert kernels and kernels <= {"_score_batch", "batch_partial_ratio"}, "\n".join(nodes)
+    finally:
+        for name in ("groups", "candidates", "top"):
+            frames[name].unpersist()
 
 
 @pytest.mark.parametrize(

@@ -7,8 +7,6 @@ development to guarantee CORRECTNESS_r{N}.json comes back green.
 
 from __future__ import annotations
 
-import math
-
 import duckdb
 import pandas as pd
 
@@ -89,8 +87,10 @@ def _kind(col: pd.Series) -> str:
 def run_gate(sf_dir: str, only: set[str] | None = None) -> int:
     """Run every queries()/oracle_sql() pair through the comparator."""
     import sys
+    from pathlib import Path
 
-    sys.path.insert(0, "/root/repo")
+    # the checkout this file is in, so the gate checks (and ships) this tree
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     import __spark_entry__ as entrymod
     from mass_georeferencing_spark.session import get_spark
 
