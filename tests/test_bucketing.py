@@ -7,8 +7,6 @@ the block key once, and every subsequent blocked join is exchange-free."""
 import pytest
 from pyspark.sql import functions as F
 
-from conftest import SF_DIR
-
 
 @pytest.fixture(scope="module")
 def warehouse(spark, tmp_path_factory):

@@ -3,8 +3,6 @@ lineage change invalidates downstream stages (north rule O8)."""
 
 import os
 
-import pytest
-
 from mass_georeferencing_spark.plans.checkpoint import (
     CheckpointRunner,
     input_path_fingerprint,

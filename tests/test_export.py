@@ -9,8 +9,6 @@ from mass_georeferencing_spark.operators.export import (
     write_partitioned_csv,
 )
 
-from conftest import SF_DIR
-
 
 def test_export_star_join(spark):
     selected = spark.createDataFrame(

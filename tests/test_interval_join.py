@@ -6,8 +6,6 @@ from pyspark.sql import functions as F
 
 from mass_georeferencing_spark.operators.interval_join import as_of_join, interval_join
 
-from conftest import SF_DIR
-
 
 def _ts(h, m=0):
     return datetime(2024, 1, 1, h, m)

@@ -14,8 +14,6 @@ from mass_georeferencing_spark.operators.scoring import (
 )
 from mass_georeferencing_spark.operators.spatial import pip_anti_join, pip_join
 
-from conftest import SF_DIR
-
 
 def _rect_wkb(min_lon, min_lat, max_lon, max_lat):
     ring = np.array(

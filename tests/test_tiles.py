@@ -5,8 +5,6 @@ from pyspark.sql import functions as F
 from mass_georeferencing_spark.functions import cells as C
 from mass_georeferencing_spark.operators.tiles import adaptive_cells, tile_counts, tile_pyramid
 
-from conftest import SF_DIR
-
 
 def _pts(spark, n=300):
     rows = [(i, float((i * 37) % 170 - 85) + 0.5, float((i * 53) % 360 - 180) + 0.5) for i in range(n)]

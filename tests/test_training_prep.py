@@ -23,10 +23,7 @@ from test_rowsonly_oracles import (
     _minhash_band_hash_ref,
 )
 
-from mass_georeferencing_spark.plans.contract_ext import (
-    _STOPS_SQL,
-    QUALITY_SCORE_ORACLE_SQL,
-)
+from mass_georeferencing_spark.plans.contract_ext import QUALITY_SCORE_ORACLE_SQL
 from mass_georeferencing_spark.plans.training_prep import prepare_training_corpus
 from tools.parity import compare, duck_connect
 

@@ -9,6 +9,12 @@ between parallelism levels. Within a level, bench.py's steady-state protocol
 times SPARK_GRAFT_SCALE_BENCH_REPEATS runs (default 3) after one warmup and
 reports the median with every sample listed — this VM shows up to ~2x
 run-to-run variance, so gate-bearing numbers carry their samples.
+
+Each finished level is written to BENCH/scale_partial.json at once. A rerun
+with the same sf_dir, factor and repeat settings takes the levels recorded
+there instead of running them again, so a chain cut by a restart resumes at
+its first unfinished level; the file is deleted once BENCH/scale_latest.md
+is written.
 """
 
 from __future__ import annotations
@@ -20,6 +26,30 @@ import sys
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+BENCH_DIR = os.path.join(REPO, "BENCH")
+PARTIAL = "scale_partial.json"
+
+
+def load_partial(path: str, settings: dict) -> dict[int, dict]:
+    """The per-level results a previous run with the same ``settings`` left
+    at ``path``; none when the file is missing or was made with others."""
+    try:
+        with open(path) as fh:
+            saved = json.load(fh)
+    except FileNotFoundError:
+        return {}
+    if saved.get("settings") != settings:
+        return {}
+    return {int(c): r for c, r in saved["results"].items()}
+
+
+def save_partial(path: str, settings: dict, results: dict[int, dict]) -> None:
+    """Write the finished levels; the rename keeps a cut write from leaving
+    a truncated file behind."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as fh:
+        json.dump({"settings": settings, "results": results}, fh)
+    os.replace(tmp, path)
 
 
 def run_bench(cpus: int, sf_dir: str, only: str, factor: str, bench_repeats: int,
@@ -97,9 +127,20 @@ def main() -> None:
     )
 
     t0 = time.time()
+    os.makedirs(BENCH_DIR, exist_ok=True)
+    partial = os.path.join(BENCH_DIR, PARTIAL)
+    settings = {"sf_dir": sf_dir, "factor": factor, "repeats": repeats,
+                "bench_repeats": bench_repeats}
+    done = load_partial(partial, settings)
     results = {}
     for cpus in levels:
+        if cpus in done:
+            print(f"local[{cpus}]: resumed from {partial}", file=sys.stderr)
+            results[cpus] = done[cpus]
+            continue
         results[cpus] = run_bench(cpus, sf_dir, only, factor, bench_repeats, repeats)
+        done[cpus] = results[cpus]
+        save_partial(partial, settings, done)
     pairs = [(n, 4 * n) for n in levels if 4 * n in results]
     effs = {
         f"{n}->{m}": round((results[m]["pages_per_sec"] / results[n]["pages_per_sec"]) / 4.0, 3)
@@ -162,10 +203,10 @@ join (vectorized Arrow scoring, dedup-before-score, thresholded pair broadcast)
 → top-50 window → EAV melt → mean → prune → tile assignment. Timed with the
 noop sink (full execution, no driver collect).
 """
-    os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
     # BENCH/BASELINE.md is the curated evidence document; raw reruns land here:
-    with open(os.path.join(REPO, "BENCH", "scale_latest.md"), "w") as fh:
+    with open(os.path.join(BENCH_DIR, "scale_latest.md"), "w") as fh:
         fh.write(md)
+    os.remove(partial)
     print(json.dumps({
         "pages_per_sec": {c: r["pages_per_sec"] for c, r in sorted(results.items())},
         "samples": {c: samples_of(r) for c, r in sorted(results.items())},
