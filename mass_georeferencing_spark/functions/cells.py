@@ -200,17 +200,6 @@ def polygon_to_cells(rings: list[np.ndarray], res: int) -> np.ndarray:
     return np.unique(xy_to_cell(gx[keep], gy[keep], res))
 
 
-def pick_cover_res(rings: list[np.ndarray], target_cells: int = 64) -> int:
-    """Choose a cover resolution so the polygon spans roughly ``target_cells``."""
-    prep = PreparedPolygon(rings)
-    w = max(prep.maxx - prep.minx, 1e-9)
-    h = max(prep.maxy - prep.miny, 1e-9)
-    side = math.sqrt(target_cells)
-    res_w = math.log2(360.0 / (w / side)) if w else MAX_RES
-    res_h = math.log2(180.0 / (h / side)) if h else MAX_RES
-    return max(0, min(MAX_RES, int(min(res_w, res_h))))
-
-
 # ---------------------------------------------------------------------------
 # JVM Column expression (codegen + DuckDB-oracle-expressible)
 # ---------------------------------------------------------------------------

@@ -7,12 +7,15 @@ Reference: ``ST_INTERSECTS(d.the_geom, g.the_geom)`` in every AOI query
 (functions.py:16-88). PostGIS GIST indexes (database/mass_georef_database.sql:449)
 are replaced by the engine's cell grid (functions/cells.py, SURVEY.md O5):
 
-- polygons are exploded to covering cells once (a generator, no shuffle);
+- polygons are exploded to covering cells once (a ``mapInArrow`` pass, no
+  shuffle). A NULL geometry covers no cell, so, as ``ST_Intersects`` with NULL
+  is NULL in PostGIS, it matches no point;
 - points get a cell id via a pure-JVM Column expression (whole-stage codegen);
 - the equi-join on cell id IS the index probe (hash-partitioned, AQE-skew-aware);
-- an exact ray-cast refine runs per-partition over Arrow batches with each
-  polygon's edge arrays prepared ONCE per partition ("shapely-prepared geometries
-  serialized per partition" per the north rule — ours are numpy edge arrays).
+- an exact ray-cast refine runs in one ``mapInArrow`` pass, no pandas, with
+  each polygon's edge arrays prepared ONCE per task ("shapely-prepared geometries
+  serialized per partition" per the north rule — ours are numpy edge arrays);
+  it yields only the points inside, without the WKB.
 
 Two physical strategies, chosen by the caller like a join hint:
 - ``broadcast``: small polygon sets (AOIs, country outlines) ship to every
@@ -25,23 +28,29 @@ measured slower with identical output (ROADMAP C6), so there is no salt path.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import math
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    BooleanType,
-    LongType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from ..functions import cells as C
-from ..functions.geo import PreparedPolygon, haversine_col, wkb_rings
+from ..functions.geo import (
+    EARTH_RADIUS_M,
+    PreparedPolygon,
+    decode_wkb,
+    haversine_col,
+    haversine_m,
+    wkb_rings,
+)
 
 DEFAULT_COVER_RES = 6
+Batches = Iterator[pa.RecordBatch]
 
 
 def with_cell(
@@ -55,6 +64,23 @@ def with_cell(
     return df.withColumn(out_col, C.latlng_to_cell_col(F.col(lat_col), F.col(lon_col), res))
 
 
+def _cover_pass(wkb_col: str, id_col: str, res: int) -> Callable[[Batches], Batches]:
+    """The ``mapInArrow`` body of :func:`polygon_cover`: one output row per
+    (polygon, covering cell). A NULL geometry covers no cell."""
+
+    def cover(batches: Batches) -> Batches:
+        for rb in batches:
+            rb = rb.filter(rb.column(wkb_col).is_valid())
+            covers = [C.polygon_to_cells(wkb_rings(w), res) for w in rb.column(wkb_col).to_pylist()]
+            rows = rb.take(pa.array(np.repeat(np.arange(rb.num_rows), [len(c) for c in covers])))
+            cells = pa.array(np.concatenate([np.empty(0, np.int64), *covers]))
+            yield pa.RecordBatch.from_arrays(
+                [rows.column(id_col), cells, rows.column(wkb_col)], names=[id_col, "cell", wkb_col]
+            )
+
+    return cover
+
+
 def polygon_cover(
     polygons: DataFrame,
     wkb_col: str = "geom_wkb",
@@ -62,62 +88,48 @@ def polygon_cover(
     res: int = DEFAULT_COVER_RES,
 ) -> DataFrame:
     """Explode polygons to covering cells: (polygon_id, cell, geom_wkb)."""
-    schema = StructType(
-        [
-            StructField(id_col, polygons.schema[id_col].dataType),
-            StructField("cell", LongType()),
-            StructField(wkb_col, polygons.schema[wkb_col].dataType),
-        ]
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, cell_ids, wkbs = [], [], []
-            for pid, wkb in zip(pdf[id_col], pdf[wkb_col]):
-                cover = C.polygon_to_cells(wkb_rings(bytes(wkb)), res)
-                ids.extend([pid] * len(cover))
-                cell_ids.extend(cover.tolist())
-                wkbs.extend([wkb] * len(cover))
-            yield pd.DataFrame({id_col: ids, "cell": cell_ids, wkb_col: wkbs})
-
-    return polygons.select(id_col, wkb_col).mapInPandas(gen, schema)
+    fields = polygons.schema
+    schema = StructType([fields[id_col], StructField("cell", LongType()), fields[wkb_col]])
+    return polygons.select(id_col, wkb_col).mapInArrow(_cover_pass(wkb_col, id_col, res), schema)
 
 
-def _pip_refine(
-    joined: DataFrame,
-    wkb_col: str,
-    id_col: str,
-    lat_col: str,
-    lon_col: str,
-) -> DataFrame:
-    """Exact ray-cast refine: group rows by polygon, prepare edge arrays once per
-    polygon per batch, test all points vectorized."""
+def _geometry_groups(
+    wkbs: pa.Array, cache: dict[bytes, object], prepare: Callable[[bytes], object]
+) -> Iterator[tuple[object, np.ndarray]]:
+    """One Arrow batch's rows grouped by WKB: ``(prepare(wkb), row positions)``
+    per distinct non-NULL value. ``dictionary_encode`` finds the distinct
+    values inside Arrow, so only they become ``bytes``; ``cache`` spans the
+    task's batches, so ``prepare`` runs once per distinct WKB per task."""
+    enc = wkbs.dictionary_encode()
+    codes = pc.fill_null(enc.indices, -1).to_numpy()
+    order = np.argsort(codes, kind="stable")
+    for rows in np.split(order, np.flatnonzero(np.diff(codes[order])) + 1):
+        if not len(rows) or codes[rows[0]] < 0:
+            continue
+        key = enc.dictionary[codes[rows[0]]].as_py()
+        geom = cache.get(key)
+        if geom is None:
+            geom = cache[key] = prepare(key)
+        yield geom, rows
 
-    contains_schema = StructType(joined.schema.fields + [StructField("_inside", BooleanType())])
 
-    def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prep_cache: dict[bytes, PreparedPolygon] = {}
-        for pdf in batches:
-            if not len(pdf):
-                pdf["_inside"] = pd.Series([], dtype=bool)
-                yield pdf
-                continue
-            inside = np.zeros(len(pdf), dtype=bool)
-            for wkb, idx in pdf.groupby(wkb_col, sort=False).groups.items():
-                key = bytes(wkb)
-                prep = prep_cache.get(key)
-                if prep is None:
-                    prep = PreparedPolygon(wkb_rings(key))
-                    prep_cache[key] = prep
-                rows = pdf.loc[idx]
-                inside[pdf.index.get_indexer(idx)] = prep.contains(
-                    rows[lon_col].to_numpy(np.float64), rows[lat_col].to_numpy(np.float64)
-                )
-            pdf = pdf.copy()
-            pdf["_inside"] = inside
-            yield pdf
+def _refine_pass(wkb_col: str, lat_col: str, lon_col: str) -> Callable[[Batches], Batches]:
+    """The ``mapInArrow`` body of :func:`pip_join`'s exact refine: ray-cast
+    each row's point against its polygon and yield only the rows inside,
+    without ``wkb_col`` (the filter lives in the pass, and the WKB does not
+    travel back to the JVM)."""
 
-    return joined.mapInPandas(refine, contains_schema).where(F.col("_inside")).drop("_inside")
+    def refine(batches: Batches) -> Batches:
+        cache: dict[bytes, object] = {}
+        for rb in batches:
+            lon = rb.column(lon_col).to_numpy(zero_copy_only=False)
+            lat = rb.column(lat_col).to_numpy(zero_copy_only=False)
+            inside = np.zeros(rb.num_rows, dtype=bool)
+            for prep, rows in _geometry_groups(rb.column(wkb_col), cache, PreparedPolygon.from_wkb):
+                inside[rows] = prep.contains(lon[rows], lat[rows])
+            yield rb.drop_columns([wkb_col]).filter(pa.array(inside))
+
+    return refine
 
 
 def pip_join(
@@ -140,8 +152,9 @@ def pip_join(
     cover = polygon_cover(polygons, wkb_col, id_col, res).withColumnRenamed("cell", "_cell")
     if strategy == "broadcast":
         cover = F.broadcast(cover)
-    joined = pts.join(cover, on="_cell")
-    return _pip_refine(joined, wkb_col, id_col, lat_col, lon_col).drop(wkb_col, "_cell")
+    joined = pts.join(cover, on="_cell").drop("_cell")
+    schema = StructType([f for f in joined.schema if f.name != wkb_col])
+    return joined.mapInArrow(_refine_pass(wkb_col, lat_col, lon_col), schema)
 
 
 def pip_anti_join(
@@ -168,18 +181,20 @@ def centroid_and_radius(
     radius for the uncertainty field (ui/mass_georef_shiny/leafletmap.R:239-258,
     app.R:1442). Centroid = area-weighted (shoelace) centroid of the shell
     rings; radius = max haversine distance centroid→vertex (an upper bound of
-    the true min bounding radius, which is what 'uncertainty' needs)."""
+    the true min bounding radius, which is what 'uncertainty' needs). A NULL
+    geometry has a NULL centroid and radius."""
     schema = (
         f"{id_col} {polygons.schema[id_col].dataType.simpleString()}, "
         "centroid_lat double, centroid_lon double, min_bound_radius_m double"
     )
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions.geo import haversine_m
-
         for pdf in batches:
             out = []
             for pid, wkb in zip(pdf[id_col], pdf[wkb_col]):
+                if wkb is None:
+                    out.append((pid, None, None, None))
+                    continue
                 rings = wkb_rings(bytes(wkb))
                 ring = np.asarray(rings[0], dtype=np.float64)
                 x, y = ring[:-1, 0], ring[:-1, 1]
@@ -191,10 +206,8 @@ def centroid_and_radius(
                 else:
                     cx = float(((x + x2) * cross).sum() / (6.0 * area))
                     cy = float(((y + y2) * cross).sum() / (6.0 * area))
-                verts = np.vstack([r for r in rings])
-                d = haversine_m(
-                    np.full(len(verts), cx), np.full(len(verts), cy), verts[:, 0], verts[:, 1]
-                )
+                verts = np.vstack(rings)
+                d = haversine_m(np.full(len(verts), cx), np.full(len(verts), cy), *verts.T)
                 out.append((pid, cy, cx, float(d.max())))
             yield pd.DataFrame(
                 out, columns=[id_col, "centroid_lat", "centroid_lon", "min_bound_radius_m"]
@@ -233,6 +246,42 @@ def build_range_wkb(
     return grouped.groupBy(group_col).applyInPandas(gen, schema)
 
 
+def _range_geometry(wkb: bytes) -> PreparedPolygon | tuple[float, float]:
+    """A range's prepared hull, or its (lon, lat) if the hull is a point."""
+    try:
+        return PreparedPolygon.from_wkb(wkb)
+    except ValueError:  # point range
+        return decode_wkb(wkb)[1]
+
+
+def _distance_pass(wkb_col: str, lat_col: str, lon_col: str) -> Callable[[Batches], Batches]:
+    """The ``mapInArrow`` body of :func:`range_distance_scores`: each row's
+    distance to its range in meters, appended as ``distance_m`` in place of
+    ``wkb_col`` (NULL for a NULL range or point)."""
+    m_per_deg = math.pi * EARTH_RADIUS_M / 180.0
+
+    def distances(batches: Batches) -> Batches:
+        cache: dict[bytes, object] = {}
+        for rb in batches:
+            lon = rb.column(lon_col).to_numpy(zero_copy_only=False)
+            lat = rb.column(lat_col).to_numpy(zero_copy_only=False)
+            dists = np.full(rb.num_rows, np.nan)
+            for geom, rows in _geometry_groups(rb.column(wkb_col), cache, _range_geometry):
+                if isinstance(geom, PreparedPolygon):
+                    scale = m_per_deg * np.maximum(np.cos(np.radians(lat[rows])), 0.2)
+                    dists[rows] = geom.distance_deg(lon[rows], lat[rows]) * scale
+                else:
+                    plon, plat = np.full(len(rows), geom[0]), np.full(len(rows), geom[1])
+                    dists[rows] = haversine_m(lon[rows], lat[rows], plon, plat)
+            rb = rb.drop_columns([wkb_col])
+            yield pa.RecordBatch.from_arrays(
+                [*rb.columns, pa.array(dists, from_pandas=True)],
+                names=[*rb.schema.names, "distance_m"],
+            )
+
+    return distances
+
+
 def range_distance_scores(
     candidates: DataFrame,
     ranges: DataFrame,
@@ -246,52 +295,14 @@ def range_distance_scores(
     = 0 inside the hull, else min vertex/edge distance in degree space scaled
     to meters at the candidate's latitude (matches the reference's planar
     ST_Distance-in-3857 spirit without a CRS library)."""
-    from ..functions.geo import EARTH_RADIUS_M
     from .scoring import distance_band_score
 
-    joined = candidates.join(F.broadcast(ranges), on=group_col)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import math
-
-        prep_cache: dict[bytes, PreparedPolygon] = {}
-        for pdf in batches:
-            dists = np.zeros(len(pdf), dtype=np.float64)
-            for wkb, idx in pdf.groupby(wkb_col, sort=False).groups.items():
-                key = bytes(wkb)
-                prep = prep_cache.get(key)
-                if prep is None:
-                    try:
-                        prep = PreparedPolygon(wkb_rings(key))
-                    except ValueError:  # point range (hull degenerated)
-                        prep = None
-                    prep_cache[key] = prep
-                rows = pdf.loc[idx]
-                lons = rows[lon_col].to_numpy(np.float64)
-                lats = rows[lat_col].to_numpy(np.float64)
-                pos = pdf.index.get_indexer(idx)
-                if prep is None:
-                    from ..functions.geo import decode_wkb, haversine_m
-
-                    _, (plon, plat) = decode_wkb(key)
-                    dists[pos] = haversine_m(lons, lats, np.full(len(lons), plon), np.full(len(lons), plat))
-                else:
-                    deg = prep.distance_deg(lons, lats)
-                    m_per_deg = math.pi * EARTH_RADIUS_M / 180.0
-                    dists[pos] = deg * m_per_deg * np.maximum(np.cos(np.radians(lats)), 0.2)
-            pdf = pdf.copy()
-            pdf["distance_m"] = dists
-            yield pdf
-
-    schema_str = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in joined.schema.fields
+    joined = candidates.join(F.broadcast(ranges.select(group_col, wkb_col)), on=group_col)
+    schema = StructType(
+        [f for f in joined.schema if f.name != wkb_col] + [StructField("distance_m", DoubleType())]
     )
-    refined = joined.mapInPandas(
-        lambda it: gen(it),
-        schema_str + ", distance_m double",
-    )
-    return refined.withColumn("score_range", distance_band_score(F.col("distance_m"))).drop(
-        wkb_col, "n_points"
+    return joined.mapInArrow(_distance_pass(wkb_col, lat_col, lon_col), schema).withColumn(
+        "score_range", distance_band_score(F.col("distance_m"))
     )
 
 

@@ -1,10 +1,13 @@
 """Kernel tests for the tiling cell index (numpy side; JVM parity in test_cells_spark)."""
 
+import math
+
 import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from mass_georeferencing_spark.functions.cells import (
+    MAX_RES,
     cell_bounds,
     cell_center,
     cell_span_m,
@@ -12,7 +15,6 @@ from mass_georeferencing_spark.functions.cells import (
     cell_to_xyr,
     k_ring,
     latlng_to_cell,
-    pick_cover_res,
     polygon_to_cells,
     ring,
     ring_cells_col,
@@ -85,6 +87,17 @@ def test_polygon_cover_contains_inner_points():
     assert set(cells.tolist()) <= cover
     # and the cover isn't the whole bbox+slack world
     assert len(cover) < 4096
+
+
+def pick_cover_res(rings: list[np.ndarray], target_cells: int = 64) -> int:
+    """A cover resolution at which the polygon spans roughly ``target_cells``."""
+    prep = PreparedPolygon(rings)
+    w = max(prep.maxx - prep.minx, 1e-9)
+    h = max(prep.maxy - prep.miny, 1e-9)
+    side = math.sqrt(target_cells)
+    res_w = math.log2(360.0 / (w / side)) if w else MAX_RES
+    res_h = math.log2(180.0 / (h / side)) if h else MAX_RES
+    return max(0, min(MAX_RES, int(min(res_w, res_h))))
 
 
 def test_pick_cover_res_reasonable():

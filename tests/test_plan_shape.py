@@ -104,6 +104,33 @@ def test_georef_python_only_in_scoring(spark, static_plan):
             frames[name].unpersist()
 
 
+# the refine node and the attributes it returns: "MapInArrow refine(in)#id, [out]"
+REFINE_NODE = re.compile(r"(MapIn\w+) refine\(.*\)#\d+, \[([^\]]*)\]")
+
+
+@pytest.mark.parametrize("strategy", ["broadcast", "cells"])
+def test_pip_refine_returns_only_kept_points(spark, static_plan, strategy):
+    # the PIP refine is one Arrow pass that filters in Python and drops the
+    # polygon WKB there: no pandas node, no Filter on an `_inside` flag above
+    # the refine, and no geom_wkb among the attributes it returns to the JVM
+    from mass_georeferencing_spark.functions.geo import wkb_polygon
+    from mass_georeferencing_spark.operators.spatial import pip_join
+
+    ring = [[-60.0, -30.0], [40.0, -30.0], [40.0, 45.0], [-60.0, 45.0], [-60.0, -30.0]]
+    polys = spark.createDataFrame(
+        [("p0", bytearray(wkb_polygon([ring])))], "polygon_id string, geom_wkb binary"
+    )
+    plan = static_plan(pip_join(_located_mentions(spark), polys, strategy=strategy, res=4))
+    lines = plan.splitlines()
+    assert "MapInPandas" not in plan, plan
+    at, node = next((i, m) for i, ln in enumerate(lines) if (m := REFINE_NODE.search(ln)))
+    assert node.group(1) == "MapInArrow", plan
+    assert not [ln for ln in lines[:at] if "Filter" in ln and "_inside" in ln], plan
+    returned = node.group(2).split(", ")
+    assert "polygon_id" in {a.split("#")[0] for a in returned}, plan
+    assert "geom_wkb" not in {a.split("#")[0] for a in returned}, plan
+
+
 @pytest.mark.parametrize(
     "row, kernel", [("dedup_minhash_pairs", "jacc"), ("ann_ivf_topk", "nearest")]
 )

@@ -2,17 +2,29 @@
 zonal stats, banding monotonicity."""
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 import pytest
 from pyspark.sql import functions as F
 
-from mass_georeferencing_spark.functions.geo import haversine_m, wkb_polygon
+from mass_georeferencing_spark.functions.geo import (
+    PreparedPolygon,
+    haversine_m,
+    wkb_multipolygon,
+    wkb_polygon,
+)
 from mass_georeferencing_spark.operators import zonal
 from mass_georeferencing_spark.operators.knn import knn_join
 from mass_georeferencing_spark.operators.scoring import (
     distance_band_score,
     elevation_band_score,
 )
-from mass_georeferencing_spark.operators.spatial import pip_anti_join, pip_join
+from mass_georeferencing_spark.operators.spatial import (
+    _refine_pass,
+    centroid_and_radius,
+    pip_anti_join,
+    pip_join,
+)
 
 
 def _rect_wkb(min_lon, min_lat, max_lon, max_lat):
@@ -62,6 +74,96 @@ def test_pip_anti_join_complement(spark, points):
     allp = {r.pid for r in points.collect()}
     assert inside | outside == allp
     assert inside & outside == set()
+
+
+def test_null_polygon_geometry_matches_nothing(spark, points):
+    # ST_Intersects with a NULL geometry is NULL, so the row is filtered: a
+    # NULL polygon covers no cell, matches no point and has no centroid
+    polys = spark.createDataFrame(
+        [("p0", bytearray(_rect_wkb(-60, -30, 40, 45))), ("p_null", None)],
+        "polygon_id string, geom_wkb binary",
+    )
+    real = polys.where(F.col("geom_wkb").isNotNull())
+    for strategy in ("broadcast", "cells"):
+        got = {
+            (r.pid, r.polygon_id)
+            for r in pip_join(points, polys, strategy=strategy, res=4).collect()
+        }
+        want = {
+            (r.pid, r.polygon_id)
+            for r in pip_join(points, real, strategy=strategy, res=4).collect()
+        }
+        assert got == want and want, strategy
+    outside = pip_anti_join(points, polys, keys=["pid"], strategy="broadcast", res=4)
+    assert {r.pid for r in outside.collect()} == {r.pid for r in points.collect()} - {
+        pid for pid, _ in want
+    }
+    cents = {r.polygon_id: r for r in centroid_and_radius(polys).collect()}
+    assert cents["p_null"].centroid_lat is None
+    assert cents["p_null"].centroid_lon is None
+    assert cents["p_null"].min_bound_radius_m is None
+    assert cents["p0"].min_bound_radius_m > 0
+
+
+def test_refine_batches_yield_exact_inside_rows():
+    # the PIP refine's mapInArrow body, fed Arrow batches directly: it must
+    # yield exactly the rows PreparedPolygon.contains selects, pass every
+    # other column through, and drop the WKB column
+    square = np.array([[0, 0], [10, 0], [10, 10], [0, 10], [0, 0]], dtype=np.float64)
+    hole = np.array([[4, 4], [6, 4], [6, 6], [4, 6], [4, 4]], dtype=np.float64)
+    tri = np.array([[20, 0], [30, 0], [20, 10], [20, 0]], dtype=np.float64)
+    wkbs = {
+        "square": wkb_polygon([square]),
+        "holed": wkb_polygon([square, hole]),
+        "tri": wkb_polygon([tri]),
+        "multi": wkb_multipolygon([[square + 40], [tri + [0, 40]]]),
+    }
+    # interior, hole, vertices, edges (the triangle's hypotenuse included),
+    # bbox boundary and corner, and outside
+    probes = [(5.0, 5.0), (2.0, 2.0), (5.0, 4.5), (0.0, 0.0), (10.0, 10.0), (30.0, 0.0),
+              (20.0, 10.0), (5.0, 0.0), (0.0, 5.0), (10.0, 5.0), (5.0, 10.0), (25.0, 5.0),
+              (21.0, 2.0), (29.0, 9.0), (30.0, 10.0), (20.0, 5.0), (45.0, 45.0), (25.0, 42.0),
+              (-1.0, -1.0)]
+
+    def batch(rows):
+        cols = list(zip(*rows)) or [[], [], [], [], []]
+        return pa.RecordBatch.from_arrays(
+            [pa.array(cols[0], pa.int64()), pa.array(cols[1], pa.float64()),
+             pa.array(cols[2], pa.float64()), pa.array(cols[3], pa.string()),
+             pa.array(cols[4], pa.binary())],
+            names=["pid", "lat", "lon", "polygon_id", "geom_wkb"],
+        )
+
+    def rows_of(name, pts):
+        return [(i, lat, lon, name, wkbs[name]) for i, (lon, lat) in enumerate(pts)]
+
+    tri_rows = rows_of("tri", probes)
+    batches = [
+        # several polygons in one batch, the triangle split across two
+        batch(rows_of("square", probes) + rows_of("holed", probes) + tri_rows[:9]),
+        batch(tri_rows[9:] + rows_of("multi", probes)),
+        batch([]),
+        batch(rows_of("square", [(50.0, 50.0), (-5.0, 5.0), (10.5, 0.0)])),
+    ]
+    out = list(_refine_pass("geom_wkb", "lat", "lon")(iter(batches)))
+    assert len(out) == len(batches)
+    kept = []
+    for rb, got in zip(batches, out):
+        d = rb.to_pydict()
+        keep = [
+            i for i in range(rb.num_rows)
+            if PreparedPolygon.from_wkb(d["geom_wkb"][i]).contains(
+                np.array([d["lon"][i]]), np.array([d["lat"][i]])
+            )[0]
+        ]
+        assert got.schema.names == ["pid", "lat", "lon", "polygon_id"]
+        assert got.to_pydict() == rb.drop_columns(["geom_wkb"]).take(pa.array(keep, pa.int64())).to_pydict()
+        kept.append(got.num_rows)
+    # the inputs hold both outcomes; the hole and the all-outside batch keep nothing
+    assert 0 < kept[0] < batches[0].num_rows and 0 < kept[1] < batches[1].num_rows
+    assert kept[2:] == [0, 0]
+    holed = out[0].filter(pc.equal(out[0].column("polygon_id"), "holed"))
+    assert (5.0, 5.0) not in set(zip(holed.column("lon").to_pylist(), holed.column("lat").to_pylist()))
 
 
 def test_knn_join_exact_vs_brute(spark):
@@ -253,9 +355,6 @@ def test_knn_broadcast_matches_ring(spark):
 
 
 def test_centroid_and_radius_rect(spark):
-    from mass_georeferencing_spark.functions.geo import haversine_m
-    from mass_georeferencing_spark.operators.spatial import centroid_and_radius
-
     polys = spark.createDataFrame(
         [("p0", bytearray(_rect_wkb(-10, -5, 10, 5)))], ["polygon_id", "geom_wkb"]
     )
